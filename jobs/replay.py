@@ -52,7 +52,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--db-exclude", default=None)
     p.add_argument("--table-include", default=None)
     p.add_argument("--table-exclude", default=None)
-    p.add_argument("--no-metrics", action="store_true")
     p.add_argument("--streaming", action="store_true",
                    help="drain via Structured Streaming availableNow")
     p.add_argument("--checkpoint-dir", default=None,
@@ -105,7 +104,6 @@ def main(argv: list[str] | None = None) -> int:
         db_exclude=args.db_exclude,
         table_include=args.table_include,
         table_exclude=args.table_exclude,
-        write_metrics=not args.no_metrics,
     )
     if args.streaming:
         from plugin_debezium_spark.streaming.realtime import run_available_now

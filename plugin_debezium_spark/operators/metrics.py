@@ -1,11 +1,14 @@
-"""Per-stream counters + per-partition lineage (SURVEY.md §2.5 A1;
-north rule: "per-partition lineage/metrics tables").
+"""Per-stream counters (SURVEY.md §2.5 A1; north rule: "per-partition
+lineage/metrics tables").
 
 The reference emits Kestra Counter metrics per stream
 (ChangeConsumer.java:48,184-190; AbstractDebeziumTask.java:270-279).
-We compute the same counts as one grouped aggregate per micro-batch
-and append them to a metrics table keyed by epoch — a tiny write that
-rides on the micro-batch's cached input.
+The engine no longer writes them as separate tables: each epoch's
+per-op counts, LSN slice and per-stream counts ride its one stats
+action (streaming/engine._epoch_agg) and commit inside its snapshot
+summary, read back with ``LakeTable.history()``. ``stream_counts`` is
+the same per-stream count as a standalone operator over any envelope
+frame.
 """
 
 from __future__ import annotations
@@ -21,21 +24,4 @@ def stream_counts(df: DataFrame, split: SplitTable = SplitTable.TABLE) -> DataFr
         df.groupBy(stream_name(split).alias("stream"))
         .agg(F.count("*").alias("records_count"))
         .orderBy("stream")
-    )
-
-
-def epoch_lineage(df: DataFrame, epoch_id: int) -> DataFrame:
-    """Lineage row per (epoch, op): counts + lsn watermark range —
-    enough to audit exactly which slice of the log an epoch applied."""
-    repo = F.col("repo") if "repo" in df.columns else F.col("key.repo")
-    lsn = F.col("lsn") if "lsn" in df.columns else F.col("_lsn")
-    return (
-        df.groupBy("op")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.min(lsn).alias("lsn_lo"),
-            F.max(lsn).alias("lsn_hi"),
-            F.countDistinct(repo).alias("n_repos"),
-        )
-        .withColumn("epoch_id", F.lit(epoch_id))
     )

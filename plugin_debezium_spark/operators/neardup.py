@@ -204,7 +204,9 @@ def dedup_against_index(
         F.col("n.bucket") == F.col("i.bucket")
     )
     if exclude_self:
-        cond = cond & (F.col(f"i.{id_col}") != F.col(f"n.{id_col}"))
+        # null-safe: a plain != is null (the pair silently dropped)
+        # when either id is null
+        cond = cond & ~F.col(f"i.{id_col}").eqNullSafe(F.col(f"n.{id_col}"))
     hits = nb.alias("n").join(idx.alias("i"), cond)
     return hits.groupBy(F.col(f"n.{id_col}").alias(id_col)).agg(
         F.min(F.col(f"i.{id_col}")).alias("first_match"),

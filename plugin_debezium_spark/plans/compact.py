@@ -62,6 +62,11 @@ def compact(
         "_bucket", bucket_expr(snap.key_cols, snap.n_buckets)
     ).repartition(max(len(targets), 1), F.col("_bucket"))
     new_files = table.write_bucket_data(df, snap.snapshot_id + 1, tag="compact")
+    stats = {
+        "compacted_buckets": len(targets),
+        "files_before": sum(per_bucket[b] for b in targets),
+        "files_after": len(new_files),
+    }
     # expected_parent: a concurrent epoch commit aborts the compaction
     # (ConcurrentCommitError) instead of silently losing its files
     out = table.commit(
@@ -71,13 +76,14 @@ def compact(
         epoch_id=None,
         properties={"compacted": True},
         expected_parent=snap.snapshot_id,
+        summary={
+            "operation": "compact",
+            **stats,
+            "rows_added": int(sum(f["rows"] for f in new_files)),
+            "expire_tombstones_below_lsn": expire_tombstones_below_lsn,
+        },
     )
-    return {
-        "compacted_buckets": len(targets),
-        "files_before": sum(per_bucket[b] for b in targets),
-        "files_after": len(new_files),
-        "snapshot_id": out.snapshot_id,
-    }
+    return {**stats, "snapshot_id": out.snapshot_id}
 
 
 def expire_snapshots(table: LakeTable, keep_last: int = 2) -> dict:
@@ -105,7 +111,9 @@ def expire_snapshots(table: LakeTable, keep_last: int = 2) -> dict:
     survive. Metadata deletes go through the MetaFS boundary;
     data-file deletes go through the table's DataFS boundary as ONE
     batch per expiry pass (object stores want DeleteObjects-style
-    batches, not 10^5 serial driver-side unlinks)."""
+    batches, not 10^5 serial driver-side unlinks). Expiry commits no
+    snapshot, so it adds no history() row; the expired snapshots'
+    rows leave history() with them."""
     import os
 
     keep_last = max(1, keep_last)

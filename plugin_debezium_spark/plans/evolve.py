@@ -127,4 +127,5 @@ def rebuild_schema_history(table) -> "object":
         files=new_files,
         expected_parent=prev.snapshot_id,
         properties={"schema_history_recovered": True},
+        summary={"operation": "recovery", "schemas": len(schemas)},
     )

@@ -27,6 +27,11 @@ Scale notes:
 - Offsets (last_lsn) and the last applied epoch live IN the snapshot
   properties — state and data commit in the same atomic swap, the
   reference's "no incomplete writes" lesson.
+- Each snapshot also carries the summary of the operation that made
+  it (Iceberg's snapshot summary, Delta's commitInfo): per-op and
+  per-stream counts, the LSN slice, files and rows added/replaced.
+  It rides the same swap, so lineage can never lag the data;
+  ``history()`` reads it back.
 """
 
 from __future__ import annotations
@@ -63,6 +68,9 @@ class Snapshot:
     key_cols: list[str]
     files: list[dict] = field(default_factory=list)  # {path,bucket,schema_id,rows}
     properties: dict = field(default_factory=dict)
+    # what THIS commit did; unlike properties, never inherited from the
+    # parent (manifests written before the field existed load as {})
+    summary: dict = field(default_factory=dict)
 
     def schema(self) -> T.StructType:
         return T.StructType.fromJson(self.schemas[self.schema_id])
@@ -73,6 +81,19 @@ class Snapshot:
     @staticmethod
     def from_json(s: str) -> "Snapshot":
         return Snapshot(**json.loads(s))
+
+
+HISTORY_COUNTS = ("files_added", "rows_added", "files_replaced", "rows_replaced")
+# lsn_lo/lsn_hi: inclusive bounds of the log slice an epoch covered
+# (epoch N+1's lsn_lo is epoch N's lsn_hi + 1)
+HISTORY_SCHEMA = (
+    "snapshot_id bigint, parent_id bigint, epoch_id bigint, operation string, "
+    "lsn_lo bigint, lsn_hi bigint, last_lsn bigint, "
+    "ops map<string, struct<n_events: bigint, lsn_lo: bigint, lsn_hi: bigint>>, "
+    "streams map<string, bigint>, schema_changes array<string>, "
+    + "".join(f"{k} bigint, " for k in HISTORY_COUNTS)
+    + "summary string"
+)
 
 
 def bucket_expr(key_cols=KEY_COLS, n_buckets: int = 32):
@@ -124,6 +145,7 @@ class LakeTable:
             key_cols=list(key_cols),
             files=[],
             properties={"last_lsn": -1, "last_epoch_id": -1},
+            summary={"operation": "create"},
         )
         t._write_snapshot(snap)
         return t
@@ -156,6 +178,46 @@ class LakeTable:
             for n in self.fs.list(self.meta_dir)
             if n.startswith("v") and n.endswith(".json")
         )
+
+    def history(self) -> DataFrame:
+        """One row per retained snapshot of the current pointer's
+        ancestor chain, oldest first: what each commit applied, from
+        its committed summary. Built on the driver from the manifests
+        (a local relation — no job runs until it is read); orphan
+        manifests of crashed commits are not on the chain and never
+        show. Keys a row has no column for stay in ``summary`` (JSON)."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        cur = self.current()
+        ids = [i for i in self.snapshots() if i < cur.snapshot_id]
+        with ThreadPoolExecutor(max_workers=16) as ex:
+            loaded = {s.snapshot_id: s for s in ex.map(self.snapshot, ids)}
+        loaded[cur.snapshot_id] = cur
+        chain, node = [], cur
+        while node is not None:
+            chain.append(node)
+            node = loaded.get(node.parent_id)
+        rows = []
+        for snap in reversed(chain):
+            s = snap.summary
+            rows.append(
+                (
+                    snap.snapshot_id,
+                    snap.parent_id,
+                    s.get("epoch_id"),
+                    s.get("operation"),
+                    s.get("lsn_lo"),
+                    s.get("lsn_hi"),
+                    snap.properties.get("last_lsn"),
+                    {op: (v["n_events"], v["lsn_lo"], v["lsn_hi"])
+                     for op, v in s.get("ops", {}).items()} or None,
+                    s.get("streams") or None,
+                    s.get("schema_changes"),
+                    *(s.get(k) for k in HISTORY_COUNTS),
+                    json.dumps(s, sort_keys=True),
+                )
+            )
+        return self.spark.createDataFrame(rows, HISTORY_SCHEMA)
 
     def read_at(
         self, snapshot_id: int, include_deleted: bool = False
@@ -311,12 +373,14 @@ class LakeTable:
         epoch_id: int | None = None,
         properties: dict | None = None,
         expected_parent: int | None = None,
+        summary: dict | None = None,
     ) -> Snapshot:
         """Atomic commit: new snapshot = (old files minus replaced
         buckets) + new files, optionally evolved schema, merged
-        properties. The _current pointer swap (os.rename) is the one
-        atomic instant — a crash before it leaves the old snapshot
-        fully intact (orphan data files are harmless garbage).
+        properties, and this commit's own ``summary``. The _current
+        pointer swap (os.rename) is the one atomic instant — a crash
+        before it leaves the old snapshot fully intact (orphan data
+        files are harmless garbage).
 
         Optimistic concurrency: the whole read-validate-swap runs under
         an exclusive-create lock (fs.create_exclusive — O_EXCL locally,
@@ -331,6 +395,7 @@ class LakeTable:
                 epoch_id,
                 properties,
                 expected_parent,
+                summary,
             )
 
     @contextmanager
@@ -374,6 +439,7 @@ class LakeTable:
         files: list[dict],
         expected_parent: int | None = None,
         properties: dict | None = None,
+        summary: dict | None = None,
     ) -> Snapshot:
         """Metadata-only commit (schema-history RECOVERY,
         plans/evolve.rebuild_schema_history): replace the schema
@@ -403,6 +469,7 @@ class LakeTable:
                 key_cols=prev.key_cols,
                 files=files,
                 properties=props,
+                summary=dict(summary or {}),
             )
             self._write_snapshot(snap)
             return snap
@@ -442,6 +509,7 @@ class LakeTable:
         epoch_id: int | None,
         properties: dict | None,
         expected_parent: int | None,
+        summary: dict | None,
     ) -> Snapshot:
         prev = self.current()
         if expected_parent is not None and prev.snapshot_id != expected_parent:
@@ -471,6 +539,7 @@ class LakeTable:
             key_cols=prev.key_cols,
             files=kept + new_files,
             properties=props,
+            summary=dict(summary or {}),
         )
         self._write_snapshot(snap)
         return snap

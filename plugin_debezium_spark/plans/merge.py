@@ -86,17 +86,67 @@ def _bucket_partitioned(
     return df.repartition(width, F.col("_bucket"), salt)
 
 
-def _commit_guard(
-    epoch_key: str, epoch_id: int, props: dict
-) -> tuple[int | None, dict]:
-    """Commit arguments for the chosen idempotence scope: the default
-    scope rides the snapshot's epoch counter; a custom scope stores the
-    id under its own property and leaves last_epoch_id untouched."""
+def _commit_merge(
+    table: LakeTable,
+    prev,
+    new_files: list[dict],
+    replaced_buckets: set[int],
+    new_schema: T.StructType,
+    changes: list[str],
+    epoch_key: str,
+    epoch_id: int,
+    last_lsn: int,
+    touched: list[int],
+    n_batch_keys: int,
+    summary: dict | None,
+) -> dict:
+    """Commit a merge's files with its offsets and summary in one
+    pointer swap, and return the merge stats.
+
+    The idempotence scope picks where the id goes: the default scope
+    rides the snapshot's epoch counter; a custom scope stores the id
+    under its own property and leaves last_epoch_id untouched. The
+    summary is the caller's part (per-op/per-stream counts, the LSN
+    slice) plus what only the merge knows: files and rows added and
+    replaced, schema changes, the committed offset."""
+    props = {"last_lsn": int(last_lsn)}
+    s = {"operation": "merge", **(summary or {})}
     if epoch_key == "last_epoch_id":
-        return epoch_id, props
-    p = dict(props)
-    p[epoch_key] = epoch_id
-    return None, p
+        eid = s["epoch_id"] = epoch_id
+    else:
+        eid = None
+        props[epoch_key] = s["batch_id"] = epoch_id
+        s["epoch_key"] = epoch_key
+    replaced = [f for f in prev.files if f["bucket"] in replaced_buckets]
+    rows_added = int(sum(f["rows"] for f in new_files))
+    s.update(
+        last_lsn=int(last_lsn),
+        schema_changes=list(changes),
+        files_added=len(new_files),
+        rows_added=rows_added,
+        files_replaced=len(replaced),
+        rows_replaced=int(sum(f["rows"] for f in replaced)),
+    )
+    snap = table.commit(
+        new_files,
+        replaced_buckets=replaced_buckets,
+        schema=new_schema,
+        epoch_id=eid,
+        properties=props,
+        expected_parent=prev.snapshot_id,
+        summary=s,
+    )
+    return {
+        "skipped": False,
+        "epoch_id": epoch_id,
+        "snapshot_id": snap.snapshot_id,
+        "touched_buckets": len(touched),
+        "batch_keys": n_batch_keys,
+        "schema_changes": changes,
+        "files_written": len(new_files),
+        "rows_written": rows_added,
+        "summary": s,
+    }
 
 
 def merge_batch(
@@ -110,6 +160,7 @@ def merge_batch(
     mor: bool = False,
     truncate_lsn: int | None = None,
     assume_unique_keys: bool = False,
+    summary: dict | None = None,
 ) -> dict:
     """Apply one micro-batch of key columns + payload columns + ``op``.
 
@@ -172,6 +223,7 @@ def merge_batch(
             lww_guard=lww_guard,
             mor=mor,
             truncate_lsn=truncate_lsn,
+            summary=summary,
         )
     finally:
         batch.unpersist()
@@ -190,6 +242,7 @@ def merge_prepared(
     mor: bool = False,
     truncate_lsn: int | None = None,
     epoch_key: str = "last_epoch_id",
+    summary: dict | None = None,
 ) -> dict:
     """Core MERGE. ``batch`` must be deduped (one row per key), carry
     ``_bucket``, and be cached by the caller (it is consumed by up to
@@ -201,6 +254,13 @@ def merge_prepared(
     (which restart at 0 per checkpoint) are never compared against the
     batch engine's epoch ids — mixing the two on one table must not
     silently skip batches.
+
+    summary: the caller's part of the snapshot summary (counts it
+    already computed, e.g. the engine's per-op/per-stream stats). It
+    commits in the same pointer swap as the data and offsets, extended
+    with the merge's own file/row counts (see _commit_merge); a crash
+    can therefore never leave data without its lineage, or lineage
+    without its data.
 
     truncate_lsn: the max LSN of any TRUNCATE envelope in this epoch
     (reference op 't', ChangeConsumer.java:262-274). Table-wide delete
@@ -269,6 +329,7 @@ def merge_prepared(
             changes,
             op_col,
             epoch_key,
+            summary,
         )
     if lww_guard:
         return _merge_lww_guard(
@@ -284,6 +345,7 @@ def merge_prepared(
             target_files,
             op_col,
             epoch_key,
+            summary,
         )
 
     upserts = _cast_to(batch.filter(F.col(op_col) != OP_DELETE), new_schema)
@@ -341,25 +403,10 @@ def merge_prepared(
         results = list(ex.map(_write, jobs))
     new_files = [f for r in results for f in r]
 
-    eid, props = _commit_guard(epoch_key, epoch_id, {"last_lsn": int(last_lsn)})
-    snap = table.commit(
-        new_files,
-        replaced_buckets=bset,
-        schema=new_schema,
-        epoch_id=eid,
-        properties=props,
-        expected_parent=prev.snapshot_id,
+    return _commit_merge(
+        table, prev, new_files, bset, new_schema, changes, epoch_key,
+        epoch_id, last_lsn, touched, n_batch_keys, summary,
     )
-    return {
-        "skipped": False,
-        "epoch_id": epoch_id,
-        "snapshot_id": snap.snapshot_id,
-        "touched_buckets": len(touched),
-        "batch_keys": n_batch_keys,
-        "schema_changes": changes,
-        "files_written": len(new_files),
-        "rows_written": int(sum(f["rows"] for f in new_files)),
-    }
 
 
 def _merge_mor(
@@ -374,6 +421,7 @@ def _merge_mor(
     changes: list[str],
     op_col: str,
     epoch_key: str = "last_epoch_id",
+    summary: dict | None = None,
 ) -> dict:
     """Append-only epoch: deduped batch → delta files (deletes as
     tombstones); one bucket shuffle, zero target I/O."""
@@ -390,29 +438,12 @@ def _merge_mor(
     new_files = table.write_bucket_data(
         deltas, prev.snapshot_id + 1, tag="delta", kind="delta"
     )
-    eid, props = _commit_guard(
-        epoch_key,
-        epoch_id,
-        {"last_lsn": max(int(last_lsn), int(prev.properties.get("last_lsn", -1)))},
+    return _commit_merge(
+        table, prev, new_files, set(),  # append-only: nothing replaced
+        new_schema, changes, epoch_key, epoch_id,
+        max(int(last_lsn), int(prev.properties.get("last_lsn", -1))),
+        touched, n_batch_keys, summary,
     )
-    snap = table.commit(
-        new_files,
-        replaced_buckets=set(),  # append-only: nothing replaced
-        schema=new_schema,
-        epoch_id=eid,
-        properties=props,
-        expected_parent=prev.snapshot_id,
-    )
-    return {
-        "skipped": False,
-        "epoch_id": epoch_id,
-        "snapshot_id": snap.snapshot_id,
-        "touched_buckets": len(touched),
-        "batch_keys": n_batch_keys,
-        "schema_changes": changes,
-        "files_written": len(new_files),
-        "rows_written": int(sum(f["rows"] for f in new_files)),
-    }
 
 
 def _merge_lww_guard(
@@ -428,6 +459,7 @@ def _merge_lww_guard(
     target_files: list[dict],
     op_col: str,
     epoch_key: str = "last_epoch_id",
+    summary: dict | None = None,
 ) -> dict:
     """Out-of-order-safe merge: LWW reduce over target ∪ batch with
     tombstone retention (see merge_prepared docstring)."""
@@ -462,26 +494,9 @@ def _merge_lww_guard(
         key_cols,
     )
     new_files = table.write_bucket_data(winners, prev.snapshot_id + 1, tag="lww")
-    eid, props = _commit_guard(
-        epoch_key,
-        epoch_id,
-        {"last_lsn": max(int(last_lsn), int(prev.properties.get("last_lsn", -1)))},
+    return _commit_merge(
+        table, prev, new_files, set(touched), new_schema, changes,
+        epoch_key, epoch_id,
+        max(int(last_lsn), int(prev.properties.get("last_lsn", -1))),
+        touched, n_batch_keys, summary,
     )
-    snap = table.commit(
-        new_files,
-        replaced_buckets=set(touched),
-        schema=new_schema,
-        epoch_id=eid,
-        properties=props,
-        expected_parent=prev.snapshot_id,
-    )
-    return {
-        "skipped": False,
-        "epoch_id": epoch_id,
-        "snapshot_id": snap.snapshot_id,
-        "touched_buckets": len(touched),
-        "batch_keys": n_batch_keys,
-        "schema_changes": changes,
-        "files_written": len(new_files),
-        "rows_written": int(sum(f["rows"] for f in new_files)),
-    }

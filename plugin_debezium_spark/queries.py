@@ -205,7 +205,6 @@ def cdc_replay_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         # ~4 epochs at any scale factor (multi-epoch machinery without
         # drowning a larger sf in per-epoch latency)
         max_events_per_batch=max(2500, n_events // 4 + 1),
-        write_metrics=False,
     )
     run(spark, cfg)
     t = LakeTable(spark, f"{d}/tbl")
@@ -273,7 +272,6 @@ def cdc_replay_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
         log_dir=f"{d}/log",
         table_dir=f"{d}/tbl",
         max_events_per_batch=max(2500, n_events // 4 + 1),
-        write_metrics=False,
         merge_mode="mor",
         truncate_policy="drop",
     )
@@ -350,7 +348,6 @@ def cdc_replay_snapshot_never(spark: SparkSession, sf_dir: str) -> DataFrame:
         log_dir=f"{d}/log",
         table_dir=f"{d}/tbl",
         max_events_per_batch=max(2500, n_events // 3 + 1),
-        write_metrics=False,
         snapshot_mode="NEVER",
     )
     run(spark, cfg)
@@ -424,7 +421,6 @@ def cdc_replay_snapshot_only(spark: SparkSession, sf_dir: str) -> DataFrame:
         log_dir=f"{d}/log",
         table_dir=f"{d}/tbl",
         max_events_per_batch=max(2500, n_events // 3 + 1),
-        write_metrics=False,
         snapshot_mode="INITIAL_ONLY",
     )
     run(spark, cfg)
@@ -525,7 +521,6 @@ def cdc_replay_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         table_dir=f"{d}/tbl",
         # ~3 stream epochs × ~3 chunks so the interleave actually runs
         max_events_per_batch=max(2500, n_events // 3 + 1),
-        write_metrics=False,
         snapshot_mode="INCREMENTAL",
         incremental_source_dir=f"{d}/src",
         incremental_source_lsn=s_pos,
@@ -614,7 +609,6 @@ def cdc_replay_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         # ≥2 epochs either side of the cutoff so the widening happens
         # MID-replay, not in the first epoch
         max_events_per_batch=max(2500, n_events // 4 + 1),
-        write_metrics=False,
     )
     run(spark, cfg)
     t = LakeTable(spark, f"{d}/tbl")
@@ -690,7 +684,6 @@ def cdc_replay_truncate(spark: SparkSession, sf_dir: str) -> DataFrame:
         table_dir=f"{d}/tbl",
         # 3 epochs: truncates in later epochs must kill earlier keys
         max_events_per_batch=max(2500, n_events // 3 + 1),
-        write_metrics=False,
     )
     run(spark, cfg)
     t = LakeTable(spark, f"{d}/tbl")
@@ -773,7 +766,6 @@ def cdc_replay_tx_aligned(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_events_per_batch=400,  # one bucket per epoch
         max_batches=1,
         tx_align=True,
-        write_metrics=False,
     )
     run(spark, cfg)
     t = LakeTable(spark, f"{d}/tbl")
@@ -862,7 +854,6 @@ def cdc_sqlite_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         log_dir=f"{d}/log",
         table_dir=f"{d}/tbl",
         max_events_per_batch=1_000_000,
-        write_metrics=False,
     )
     run(spark, cfg)
     return (
@@ -1399,7 +1390,7 @@ def cdc_replay_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = tempfile.mkdtemp(prefix="cdc_diff_")
     atexit.register(shutil.rmtree, d, True)
     cfg = EngineConfig(
-        log_dir=f"{d}/nolog", table_dir=f"{d}/tbl", write_metrics=False
+        log_dir=f"{d}/nolog", table_dir=f"{d}/tbl"
     )
     table = ensure_table(spark, cfg)
     try:

@@ -34,7 +34,7 @@ from plugin_debezium_spark.functions.hashing import content_sha256
 from plugin_debezium_spark.models import KEY_COLS, OP_TRUNCATE, base_schema
 from plugin_debezium_spark.operators.dedupe import latest_by_key
 from plugin_debezium_spark.operators.filters import drop_ddl, include_exclude
-from plugin_debezium_spark.operators.metrics import epoch_lineage, stream_counts
+from plugin_debezium_spark.operators.routing import stream_name
 from plugin_debezium_spark.plans.lake import LakeTable
 from plugin_debezium_spark.plans.merge import merge_batch
 from plugin_debezium_spark.sources.log_reader import (
@@ -151,6 +151,10 @@ class EngineConfig:
     column_truncate: dict | None = None
     column_mask: dict | None = None
     column_mask_hash: dict | None = None
+    # accepted and ignored: each epoch's per-op/per-stream counts and
+    # LSN slice now commit inside its snapshot summary
+    # (LakeTable.history()); the flag stays so configs that still pass
+    # it keep working
     write_metrics: bool = True
     # transaction-aligned epochs: lower each planned epoch boundary so
     # no source transaction (Envelope.java:36-37 transaction block) is
@@ -272,15 +276,64 @@ def build_batch_rows(
     return _rows_from_after(decoded, payload_schema, sha_mode)
 
 
-def _variant_ddl_to_struct(ddl: str | None, base: T.StructType) -> T.StructType:
-    """'OBJECT<a: BIGINT, ...>' (schema_of_variant_agg output) →
-    StructType, merged with the table's payload schema."""
+def _variant_type(ddl: str | None) -> T.DataType:
+    """schema_of_variant(_agg) DDL → DataType ('OBJECT<...>' → struct;
+    VOID → NullType, VARIANT → VariantType)."""
+    if not ddl:
+        return T.NullType()
+    return T._parse_datatype_string(ddl.replace("OBJECT<", "STRUCT<"))
+
+
+def _merge_variant_types(a: T.DataType, b: T.DataType) -> T.DataType:
+    """The merge schema_of_variant_agg applies across rows, mirrored on
+    the driver: folding per-group results with it gives exactly the
+    type one global aggregate would (tests/test_epoch_summary.py pins
+    it against Spark). Integers are BIGINT, which widens into decimals
+    as DECIMAL(20,0); a decimal wider than 38 digits, or any decimal
+    meeting a DOUBLE, becomes DOUBLE; object fields union in name
+    order; anything else incompatible becomes VARIANT."""
+    if a == b or isinstance(b, T.NullType):
+        return a
+    if isinstance(a, T.NullType):
+        return b
+    num = (T.LongType, T.DecimalType, T.DoubleType)
+    if isinstance(a, num) and isinstance(b, num):
+        if isinstance(a, T.DoubleType) or isinstance(b, T.DoubleType):
+            return T.DoubleType()
+        da, db = (
+            x if isinstance(x, T.DecimalType) else T.DecimalType(20, 0)
+            for x in (a, b)
+        )
+        scale = max(da.scale, db.scale)
+        digits = max(da.precision - da.scale, db.precision - db.scale) + scale
+        return T.DecimalType(digits, scale) if digits <= 38 else T.DoubleType()
+    if isinstance(a, T.StructType) and isinstance(b, T.StructType):
+        fa = {f.name: f.dataType for f in a.fields}
+        fb = {f.name: f.dataType for f in b.fields}
+        return T.StructType(
+            [
+                T.StructField(
+                    n,
+                    _merge_variant_types(
+                        fa.get(n, T.NullType()), fb.get(n, T.NullType())
+                    ),
+                    True,
+                )
+                for n in sorted(fa.keys() | fb.keys())
+            ]
+        )
+    if isinstance(a, T.ArrayType) and isinstance(b, T.ArrayType):
+        return T.ArrayType(_merge_variant_types(a.elementType, b.elementType), True)
+    return T.VariantType()
+
+
+def _payload_schema(batch: T.DataType, base: T.StructType) -> T.StructType:
+    """An epoch's inferred after-image type merged into the table's
+    payload schema; a non-object image (all-null, mixed) adds nothing."""
     from plugin_debezium_spark.functions.decode import merge_types
 
-    if not ddl or not ddl.upper().startswith("OBJECT<"):
+    if not isinstance(batch, T.StructType):
         return base
-    struct_ddl = ddl.replace("OBJECT<", "STRUCT<")
-    batch = T._parse_datatype_string(struct_ddl)
     merged = merge_types(base, batch)
     assert isinstance(merged, T.StructType)
     return merged
@@ -370,9 +423,9 @@ def apply_epoch(
     )
     if cfg.decode_mode == "variant":
         return _apply_epoch_variant(
-            spark, table, cfg, epoch_id, hi, events, n_events
+            spark, table, cfg, epoch_id, hi, events, n_events, lo=lo
         )
-    return _apply_epoch_json(spark, table, cfg, epoch_id, hi, events)
+    return _apply_epoch_json(spark, table, cfg, epoch_id, hi, events, lo=lo)
 
 
 def prepare_latest(
@@ -466,34 +519,100 @@ def prepare_latest(
     )
 
 
-def _epoch_agg(latest: DataFrame):
+def _epoch_agg(latest: DataFrame) -> dict:
     """ONE action over the winner set: materializes the cache AND
     computes schema inference + the touched-bucket set + key count +
-    truncate point + snapshot-phase flag together (no separate
-    count()-then-agg double pass). Depends only on the epoch's own
-    rows — never on the table — so the driver loop can run it in the
-    prefetch thread, hidden under the previous epoch's merge.
+    truncate point + snapshot-phase flag + the epoch's summary together
+    (no separate count()-then-agg double pass). Depends only on the
+    epoch's own rows — never on the table — so the driver loop can run
+    it in the prefetch thread, hidden under the previous epoch's merge.
 
-    t_lsn rides the same action: TRUNCATE rows (op='t', null key)
-    group under the null key in the dedupe, so the max-'t' LSN of
-    the epoch survives into `latest` — zero extra jobs when the
-    log carries no truncates."""
+    The aggregate is grouped by (op, stream), so it returns at most
+    ops × streams rows; the driver folds them back into the epoch-wide
+    stats (_fold_epoch_agg) and, from the same rows, into the per-op
+    and per-stream counts the snapshot summary commits with the data.
+    t_lsn is the 't' group's max LSN: TRUNCATE rows (op='t', null key)
+    group under the null key in the dedupe, so the max-'t' LSN of the
+    epoch survives into `latest`.
+
+    Columns it finds decide what it computes: ``_av`` (variant path)
+    adds the schema, ``_bucket`` the touched buckets, ``_raw_stream``
+    (one-pass dedupe) the consumed-event count."""
+    cols = set(latest.columns)
     aggs = [
-        F.expr("schema_of_variant_agg(_av)").alias("s"),
-        F.collect_set("_bucket").alias("bs"),
         F.count("*").alias("n"),
-        F.max(F.when(F.col("op") == OP_TRUNCATE, F.col("lsn"))).alias(
-            "t_lsn"
-        ),
-        # snapshot-phase detection for the stop-condition rules
-        # (maxRecords is ignored while snapshotting)
-        F.count(F.when(F.col("op") != "r", 1)).alias("n_stream"),
+        F.min("lsn").alias("lo"),
+        F.max("lsn").alias("hi"),
     ]
-    if "_raw_stream" in latest.columns:
-        # consumed-event counter carried through the one-pass dedupe
-        # (the two-pass path delivers it via latest._n_raw_stream)
-        aggs.append(F.sum("_raw_stream").alias("n_raw_stream"))
-    return latest.agg(*aggs).collect()[0]
+    if "_av" in cols:
+        aggs.append(F.expr("schema_of_variant_agg(_av)").alias("s"))
+    if "_bucket" in cols:
+        aggs.append(F.collect_set("_bucket").alias("bs"))
+    if "_raw_stream" in cols:
+        aggs.append(F.sum("_raw_stream").alias("raw"))
+    rows = (
+        latest.groupBy("op", stream_name().alias("stream"))
+        .agg(*aggs)
+        .collect()
+    )
+    return _fold_epoch_agg([r.asDict() for r in rows])
+
+
+def _fold_epoch_agg(rows: list[dict]) -> dict:
+    """Per-(op, stream) aggregate rows → the epoch-wide stats
+    (``schema``, ``bs``, ``n``, ``t_lsn``, ``n_stream``,
+    ``n_raw_stream``) plus ``ops`` {op: {n_events, lsn_lo, lsn_hi}} and
+    ``streams`` {stream: records_count}."""
+    out = {
+        "schema": T.NullType(),
+        "bs": set(),
+        "n": 0,
+        "t_lsn": None,
+        "n_stream": 0,
+        "n_raw_stream": None,
+        "ops": {},
+        "streams": {},
+    }
+    for r in rows:
+        n, op = int(r["n"]), r["op"]
+        out["n"] += n
+        if op is not None and op != "r":
+            # snapshot-phase detection for the stop-condition rules
+            # (maxRecords is ignored while snapshotting)
+            out["n_stream"] += n
+        if "s" in r:
+            out["schema"] = _merge_variant_types(
+                out["schema"], _variant_type(r["s"])
+            )
+        out["bs"].update(r.get("bs") or ())
+        if "raw" in r:
+            out["n_raw_stream"] = (out["n_raw_stream"] or 0) + int(r["raw"] or 0)
+        o = out["ops"].setdefault(
+            str(op), {"n_events": 0, "lsn_lo": r["lo"], "lsn_hi": r["hi"]}
+        )
+        o["n_events"] += n
+        o["lsn_lo"] = min(o["lsn_lo"], r["lo"])
+        o["lsn_hi"] = max(o["lsn_hi"], r["hi"])
+        stream = r["stream"]
+        out["streams"][stream] = out["streams"].get(stream, 0) + n
+    if OP_TRUNCATE in out["ops"]:
+        out["t_lsn"] = out["ops"][OP_TRUNCATE]["lsn_hi"]
+    return out
+
+
+def _epoch_summary(agg: dict, lo: int | None, hi: int) -> dict:
+    """The epoch's part of its snapshot summary: the inclusive LSN
+    slice it covered (the planned range; a streaming micro-batch, which
+    has no planned range, reports its first event) and the per-op and
+    per-stream counts of its rows."""
+    first = min((o["lsn_lo"] for o in agg["ops"].values()), default=hi)
+    return {
+        "operation": "epoch",
+        "lsn_lo": int(lo) + 1 if lo is not None else int(first),
+        "lsn_hi": int(hi),
+        "ops": agg["ops"],
+        "streams": agg["streams"],
+    }
 
 
 def _ingest_transforms(decoded: DataFrame, cfg: EngineConfig) -> DataFrame:
@@ -525,17 +644,22 @@ def _apply_epoch_variant(
     n_events: int | None = None,
     prepared: DataFrame | None = None,
     epoch_key: str = "last_epoch_id",
+    lo: int | None = None,
 ) -> dict:
     """Fast path. Order of operations is the whole trick:
 
     1. parse JSON → variant ONCE, shuffle variants through the LWW
        dedupe (losers are never decoded or hashed),
     2. ONE action over the cached winners computes schema inference
-       (schema_of_variant_agg), the touched-bucket set, and the key
-       count together,
+       (schema_of_variant_agg), the touched-bucket set, the key count
+       and the epoch summary's counts together,
     3. decode winners via a variant→struct cast, sha256 winners only,
     4. merge_prepared writes survivors (no shuffle, broadcast
-       anti-join) + upserts (one bucket shuffle), commits atomically.
+       anti-join) + upserts (one bucket shuffle), commits them with
+       the offsets and the summary atomically.
+
+    lo: the epoch's exclusive start LSN (the summary's slice); None
+    for streaming micro-batches.
     """
     from plugin_debezium_spark.plans.lake import bucket_expr
     from plugin_debezium_spark.plans.merge import merge_prepared
@@ -558,7 +682,7 @@ def _apply_epoch_variant(
             if agg["t_lsn"] is not None and cfg.truncate_policy == "apply"
             else None
         )
-        payload_schema = _variant_ddl_to_struct(agg["s"], _payload_base(table))
+        payload_schema = _payload_schema(agg["schema"], _payload_base(table))
         payload_cols = [
             f.name for f in payload_schema.fields if f.name not in KEY_COLS
         ]
@@ -599,6 +723,7 @@ def _apply_epoch_variant(
             mor=cfg.merge_mode == "mor",
             truncate_lsn=t_lsn,
             epoch_key=epoch_key,
+            summary=_epoch_summary(agg, lo, hi),
         )
         stats["t_infer_s"] = round(t1 - t0, 2)
         stats["t_merge_s"] = round(time.time() - t1, 2)
@@ -611,13 +736,10 @@ def _apply_epoch_variant(
         # pass-1 action, n_raw_stream from the one-pass extra sum.
         raw = getattr(latest, "_n_raw_stream", None)
         if raw is None:
-            d = agg.asDict()
-            raw = int(d.get("n_raw_stream") or 0)
-        stats["has_stream"] = raw > 0 or int(agg["n_stream"]) > 0
+            raw = agg["n_raw_stream"] or 0
+        stats["has_stream"] = raw > 0 or agg["n_stream"] > 0
         stats["n_stream"] = int(raw)
-        stats["n_winners_stream"] = int(agg["n_stream"])
-        if cfg.write_metrics and not stats.get("skipped"):
-            _write_metrics(cfg, latest, epoch_id)
+        stats["n_winners_stream"] = agg["n_stream"]
         return stats
     finally:
         latest.unpersist()
@@ -632,22 +754,18 @@ def _apply_epoch_json(
     epoch_id: int,
     hi: int,
     events: DataFrame,
+    lo: int | None = None,
 ) -> dict:
     """from_json / Arrow parity path (two JSON passes; kept for
-    environments without VariantType and as a differential oracle)."""
+    environments without VariantType and as a differential oracle).
+    Its summary counts the raw events (no dedupe before the stats)."""
     work = events.cache()
     try:
         t0 = time.time()
         t_lsn = None
-        row = work.agg(
-            F.max(F.when(F.col("op") == OP_TRUNCATE, F.col("lsn"))).alias(
-                "t"
-            ),
-            F.count(F.when(F.col("op") != "r", 1)).alias("n_stream"),
-        ).collect()[0]
-        has_stream = int(row["n_stream"]) > 0
-        if cfg.truncate_policy == "apply" and row["t"] is not None:
-            t_lsn = int(row["t"])
+        agg = _epoch_agg(work)
+        if cfg.truncate_policy == "apply" and agg["t_lsn"] is not None:
+            t_lsn = int(agg["t_lsn"])
             work = work.filter(F.col("op") != OP_TRUNCATE)
         payload_schema = infer_payload_schema(
             work, cols=("after_json",), base=_payload_base(table)
@@ -671,29 +789,21 @@ def _apply_epoch_json(
             # already one row per key (latest_by_key above) — don't pay
             # the full-payload dedupe shuffle twice
             assume_unique_keys=True,
+            summary=_epoch_summary(agg, lo, hi),
         )
         stats["t_infer_s"] = round(t1 - t0, 2)
         stats["t_merge_s"] = round(time.time() - t1, 2)
-        stats["has_stream"] = has_stream
-        stats["n_stream"] = int(row["n_stream"])
-        if cfg.write_metrics and not stats.get("skipped"):
-            _write_metrics(cfg, work, epoch_id)
+        stats["has_stream"] = agg["n_stream"] > 0
+        stats["n_stream"] = agg["n_stream"]
         return stats
     finally:
         work.unpersist()
 
 
-def _write_metrics(cfg: EngineConfig, df: DataFrame, epoch_id: int) -> None:
-    """Lineage + per-stream counters, idempotent per epoch dir. On the
-    variant path the input is the deduped batch (winner lineage); the
-    json path records raw-event lineage."""
-    mdir = os.path.join(cfg.table_dir, "metrics")
-    epoch_lineage(df, epoch_id).write.mode("overwrite").parquet(
-        os.path.join(mdir, "lineage", f"epoch={epoch_id}")
-    )
-    stream_counts(df).withColumn("epoch_id", F.lit(epoch_id)).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(mdir, "streams", f"epoch={epoch_id}"))
+def _write_metrics(*_args, **_kwargs) -> None:
+    """No-op, never called: per-epoch lineage and counts commit inside
+    the snapshot summary (_epoch_agg → merge_prepared). The name stays
+    because perfbench/tracing.py wraps it to report engine.metrics_s."""
 
 
 def run(spark: SparkSession, cfg: EngineConfig) -> dict:
@@ -824,6 +934,7 @@ def _drain(
                         _events_of(ep),
                         ep.get("n"),
                         prepared=prepared,
+                        lo=ep["lo"],
                     ),
                 )
     else:
@@ -924,6 +1035,10 @@ def _run_inner(spark: SparkSession, cfg: EngineConfig, t0: float) -> dict:
                             "schema_only_pinned": True,
                         },
                         expected_parent=snap.snapshot_id,
+                        summary={
+                            "operation": "schema_only_pin",
+                            "last_lsn": hwm,
+                        },
                     )
                     last_lsn = hwm
                     break
@@ -966,11 +1081,11 @@ def _run_inner(spark: SparkSession, cfg: EngineConfig, t0: float) -> dict:
             gcfg = dataclasses.replace(cfg, lww_guard=True)
             if cfg.decode_mode == "variant":
                 stats = _apply_epoch_variant(
-                    spark, table, gcfg, next_epoch, se, events
+                    spark, table, gcfg, next_epoch, se, events, lo=-1
                 )
             else:
                 stats = _apply_epoch_json(
-                    spark, table, gcfg, next_epoch, se, events
+                    spark, table, gcfg, next_epoch, se, events, lo=-1
                 )
             stats["resnapshot"] = True
             applied.append(stats)

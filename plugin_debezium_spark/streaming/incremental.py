@@ -163,6 +163,13 @@ def apply_chunk(
             lww_guard=cfg.merge_mode == "cow",
             mor=cfg.merge_mode == "mor",
             epoch_key=CHUNK_PROP,
+            # from the action above: a chunk's summary costs no job
+            summary={
+                "operation": "chunk",
+                "chunk_id": chunk_id,
+                "rows": int(agg["n"]),
+                "buckets": len(agg["bs"]),
+            },
         )
         stats["chunk_id"] = chunk_id
         stats["chunk_rows"] = int(chunk["n"])

@@ -134,6 +134,7 @@ def stream_log(
                     set(),
                     properties={pkey: pin},
                     expected_parent=snap.snapshot_id,
+                    summary={"operation": "schema_only_pin", pkey: pin},
                 )
                 break
             except ConcurrentCommitError:
@@ -274,7 +275,8 @@ def stream_rows(
         read_range,
     )
     from plugin_debezium_spark.streaming.engine import (
-        _variant_ddl_to_struct,
+        _payload_schema,
+        _variant_type,
     )
 
     if fmt not in ("raw", "inline", "wrap"):
@@ -323,7 +325,7 @@ def stream_rows(
             .agg(F.expr("schema_of_variant_agg(parse_json(_j))"))
             .collect()[0][0]
         )
-        schema = _variant_ddl_to_struct(ddl, T.StructType([]))
+        schema = _payload_schema(_variant_type(ddl), T.StructType([]))
         if not schema.fields:  # keyless epoch of tombstones only
             schema = T.StructType([T.StructField("content", T.StringType())])
         s = schema.simpleString()

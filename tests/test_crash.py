@@ -19,7 +19,6 @@ def test_crash_between_write_and_commit(spark, tmp_path, monkeypatch):
         log_dir=log,
         table_dir=str(tmp_path / "tbl"),
         max_events_per_batch=1_000,
-        write_metrics=False,
     )
     # first epoch applies cleanly
     run(

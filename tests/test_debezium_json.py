@@ -90,7 +90,7 @@ def test_duplicate_source_lsns_disambiguated(spark, tmp_path):
     lsns = [r["lsn"] for r in env.collect()]
     assert len(lsns) == len(set(lsns))  # unique
     cfg = EngineConfig(
-        log_dir=log, table_dir=str(tmp_path / "t"), write_metrics=False
+        log_dir=log, table_dir=str(tmp_path / "t")
     )
     run(spark, cfg)
     rows = LakeTable(spark, cfg.table_dir).read().collect()
@@ -103,7 +103,6 @@ def test_debezium_dump_replays_to_final_state(spark, dump, tmp_path):
         log_dir=log,
         table_dir=str(tmp_path / "tbl"),
         max_events_per_batch=3,
-        write_metrics=False,
     )
     out = run(spark, cfg)
     assert out["batches_applied"] >= 2
@@ -213,7 +212,6 @@ def test_mysql_binlog_rotation_preserves_total_order(spark, tmp_path):
         cfg = EngineConfig(
             log_dir=log,
             table_dir=str(tmp_path / f"t_{name}"),
-            write_metrics=False,
         )
         run(spark, cfg)
         finals[name] = {
@@ -293,7 +291,7 @@ def test_opaque_resume_tokens_order_same_ms_bursts(spark, tmp_path):
     assert len(set(got.values())) == 3  # unique lsns minted
     assert got["v1"] < got["v2"] < got["v3"]  # source order round-trips
     cfg = EngineConfig(
-        log_dir=log, table_dir=str(tmp_path / "t"), write_metrics=False
+        log_dir=log, table_dir=str(tmp_path / "t")
     )
     run(spark, cfg)
     rows = LakeTable(spark, cfg.table_dir).read().collect()
@@ -349,7 +347,7 @@ def test_string_encoded_positions_survive(spark, tmp_path):
     assert rows[99]["source"]["snapshot"] == "false"
     log = import_to_log(spark, str(p), str(tmp_path / "log"), lsn_buckets=2)
     cfg = EngineConfig(
-        log_dir=log, table_dir=str(tmp_path / "t"), write_metrics=False
+        log_dir=log, table_dir=str(tmp_path / "t")
     )
     run(spark, cfg)
     rows = LakeTable(spark, cfg.table_dir).read().collect()
@@ -476,7 +474,6 @@ def test_mongo_string_encoded_images_replay_like_objects(spark, tmp_path):
         cfg = EngineConfig(
             log_dir=log,
             table_dir=str(tmp_path / f"t_{variant}"),
-            write_metrics=False,
         )
         run(spark, cfg)
         finals.append(

@@ -36,7 +36,6 @@ def test_table_diff_matches_golden_cutoffs(spark, tmp_path):
         log_dir=log_dir,
         table_dir=str(tmp_path / "tbl"),
         max_events_per_batch=1_000,
-        write_metrics=False,
     )
     run(spark, cfg)
     t = LakeTable(spark, cfg.table_dir)
@@ -77,7 +76,7 @@ def test_table_diff_same_snapshot_is_empty(spark, tmp_path):
         LogSpec(n_events=500, n_keys=100, n_snapshot=100, epoch_size=500),
     )
     cfg = EngineConfig(
-        log_dir=log_dir, table_dir=str(tmp_path / "tbl"), write_metrics=False
+        log_dir=log_dir, table_dir=str(tmp_path / "tbl")
     )
     run(spark, cfg)
     t = LakeTable(spark, cfg.table_dir)
@@ -101,7 +100,6 @@ def test_table_diff_on_mor_snapshots(spark, tmp_path):
             table_dir=str(tmp_path / f"tbl_{mode}"),
             max_events_per_batch=500,
             merge_mode=mode,
-            write_metrics=False,
         )
         run(spark, cfg)
         t = LakeTable(spark, cfg.table_dir)

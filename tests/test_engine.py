@@ -148,7 +148,6 @@ def test_sharded_appliers_union_equals_full(spark, log_dir, tmp_path):
                 log_dir=log_dir,
                 table_dir=td,
                 max_events_per_batch=2_000,
-                write_metrics=False,
                 shard=(shards, i),
             ),
         )
@@ -194,18 +193,24 @@ def test_max_duration_stops_cleanly(spark, log_dir, tmp_path):
 
 
 def test_metrics_lineage_written(spark, log_dir, tmp_path):
+    """Lineage lives in the snapshot summaries: history() holds one row
+    per epoch with its per-op counts and LSN range; no side tables."""
     table_dir = str(tmp_path / "tbl")
-    run(
+    out = run(
         spark,
         EngineConfig(
             log_dir=log_dir, table_dir=table_dir, max_events_per_batch=1_000
         ),
     )
-    lineage = spark.read.parquet(
-        os.path.join(table_dir, "metrics", "lineage", "epoch=0")
-    )
-    assert lineage.count() > 0
-    assert {"op", "n_events", "lsn_lo", "lsn_hi"}.issubset(set(lineage.columns))
+    hist = [
+        r
+        for r in LakeTable(spark, table_dir).history().collect()
+        if r["operation"] == "epoch"
+    ]
+    assert [r["epoch_id"] for r in hist] == list(range(out["batches_applied"]))
+    first = hist[0]["ops"]["r"]
+    assert first["n_events"] > 0 and first["lsn_lo"] <= first["lsn_hi"]
+    assert not os.path.exists(os.path.join(table_dir, "metrics"))
 
 
 # --- TRUNCATE semantics (reference ChangeConsumer.java:262-274) -----------
@@ -469,10 +474,13 @@ def test_snapshot_mode_schema_only_streams_from_start_position(
     # the hwm is pinned durably at FIRST start, so events landing
     # between runs are streamed, never skipped by a re-derived pin
     assert int(t.current().properties["last_lsn"]) == hwm
+    # the pin records its own summary, which no later epoch inherits
+    assert t.current().summary == {"operation": "schema_only_pin", "last_lsn": hwm}
 
     _copy_buckets(log_dir, staged, lambda b: b >= split)
     out2 = run(spark, cfg)
     assert out2["batches_applied"] > 0
+    assert out2["epochs"][0]["summary"]["lsn_lo"] == hwm + 1
     tail = log_pdf[(log_pdf["lsn"] > hwm) & (log_pdf["op"] != "r")]
     assert _final_hashes(spark, table_dir) == golden_key_hashes(tail)
 
@@ -628,6 +636,10 @@ def test_snapshot_mode_recovery_rebuilds_history_and_resumes(
     assert out["batches_applied"] > 0  # streamed the tail, no snapshot
     cur = LakeTable(spark, table_dir).current()
     assert cur.properties.get("schema_history_recovered") is True
+    ops = [r["operation"] for r in LakeTable(spark, table_dir).history().collect()]
+    # the rebuild is its own commit between the epochs it resumes from
+    assert ops.count("recovery") == 1
+    assert ops[ops.index("recovery") + 1:] == ["epoch"] * out["batches_applied"]
     schema = {f.name: f.dataType.simpleString() for f in cur.schema().fields}
     assert schema.get("size_bytes") == "bigint"
     golden = golden_key_hashes(read_log_pandas(log_dir))
@@ -750,7 +762,6 @@ def test_max_records_counts_consumed_events_not_winners(
         table_dir=str(d / "tbl"),
         max_events_per_batch=200,
         max_records=500,
-        write_metrics=False,
         **kwargs,
     )
     out = run(spark, cfg)

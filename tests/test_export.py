@@ -122,7 +122,6 @@ def test_polling_trigger_executions(spark, log_dir, tmp_path):
         log_dir=log_dir,
         table_dir=str(tmp_path / "t"),
         max_events_per_batch=500,
-        write_metrics=False,
     )
     trig = PollingTrigger(cfg, interval_s=0.0)
     execs = trig.poll(spark, max_evaluations=2)

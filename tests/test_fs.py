@@ -98,7 +98,6 @@ def test_engine_replay_on_inmemory_metadata(spark, tmp_path):
         log_dir=log,
         table_dir=str(tmp_path / "tbl"),
         max_events_per_batch=300,
-        write_metrics=False,
         meta_fs=fs,
     )
     out = run(spark, cfg)

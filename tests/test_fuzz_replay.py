@@ -64,7 +64,6 @@ def test_fuzz_config(spark, tmp_path, i):
         log_dir=log,
         table_dir=str(tmp_path / "tbl"),
         max_events_per_batch=spec.epoch_size,
-        write_metrics=False,
         **overrides,
     )
     run(spark, cfg)

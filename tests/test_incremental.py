@@ -81,7 +81,6 @@ def _cfg(log_dir, dump, table_dir, **kw):
         incremental_source_lsn=s_pos,
         incremental_lsn_col="src_lsn",
         incremental_chunk_rows=max(1, n_src // 3 + 1),
-        write_metrics=False,
     )
     base.update(kw)
     return EngineConfig(**base)
@@ -101,6 +100,16 @@ def test_incremental_matches_golden(spark, log_dir, dump, tmp_path):
     assert out["batches_applied"] >= 2  # the interleave actually ran
     golden = golden_key_hashes(read_log_pandas(log_dir))
     assert _final_hashes(spark, table_dir) == golden
+    # each chunk commits its own summary, never an epoch's
+    chunks = [s for s in out["epochs"] if "chunk_id" in s]
+    for s in chunks:
+        summ = s["summary"]
+        assert summ["operation"] == "chunk"
+        assert summ["chunk_id"] == s["chunk_id"]
+        assert summ["rows"] == s["chunk_rows"] and summ["buckets"] > 0
+        assert not {"epoch_id", "ops", "streams"} & set(summ)
+    hist = LakeTable(spark, table_dir).history().collect()
+    assert [r["operation"] for r in hist].count("chunk") == len(chunks)
 
 
 def test_incremental_rerun_is_noop(spark, log_dir, dump, tmp_path):
@@ -177,7 +186,6 @@ def test_delete_before_chunk_not_resurrected(spark, tmp_path):
         incremental_source_lsn=20,
         incremental_lsn_col="src_lsn",
         incremental_chunk_rows=1,  # one file per chunk
-        write_metrics=False,
     )
     out = run(spark, cfg)
     assert out["chunks_applied"] == 2 and out["batches_applied"] == 1

@@ -123,3 +123,23 @@ def test_max_bucket_size_drops_degenerate_index_buckets(spark):
     assert capped.count() == 0
     uncapped = dedup_against_index(idx, delta, **KW)
     assert uncapped.count() == 1
+
+
+def test_exclude_self_keeps_collisions_with_null_ids(spark):
+    """exclude_self compares ids null-safely: a null id on either side
+    is not "the same doc", so its real collisions still flag."""
+    schema = "doc_id long, text string"
+    near = LOREM.replace("lazy", "sleepy")
+    kw = dict(KW, exclude_self=True)
+
+    idx = lsh_index(spark.createDataFrame([(None, LOREM), (2, OTHER)], schema), **KW)
+    got = dedup_against_index(idx, spark.createDataFrame([(101, near)], schema), **kw)
+    assert [r["doc_id"] for r in got.collect()] == [101]
+
+    idx = lsh_index(spark.createDataFrame([(0, LOREM)], schema), **KW)
+    got = dedup_against_index(idx, spark.createDataFrame([(None, near)], schema), **kw)
+    assert [(r["doc_id"], r["first_match"]) for r in got.collect()] == [(None, 0)]
+
+    # a doc's own index rows still never flag it
+    got = dedup_against_index(idx, spark.createDataFrame([(0, near)], schema), **kw)
+    assert got.count() == 0

@@ -34,7 +34,6 @@ def test_mor_replay_matches_golden(spark, log_dir, tmp_path):
         table_dir=td,
         max_events_per_batch=1_000,
         merge_mode="mor",
-        write_metrics=False,
     )
     out = run(spark, cfg)
     assert out["batches_applied"] == 3
@@ -58,7 +57,6 @@ def test_mor_time_travel_resolves(spark, log_dir, tmp_path):
             table_dir=td,
             max_events_per_batch=1_000,
             merge_mode="mor",
-            write_metrics=False,
         ),
     )
     t = LakeTable(spark, td)
@@ -76,7 +74,6 @@ def test_mor_compaction_folds_deltas(spark, log_dir, tmp_path):
         table_dir=td,
         max_events_per_batch=1_000,
         merge_mode="mor",
-        write_metrics=False,
     )
     run(spark, cfg)
     before = _hashes(spark, td)

@@ -85,7 +85,6 @@ def test_merge_uses_broadcast_anti_join(spark, log_dir, tmp_path):
                 log_dir=log_dir,
                 table_dir=str(tmp_path / "t"),
                 max_events_per_batch=1000,
-                write_metrics=False,
             ),
         )
     finally:

@@ -22,7 +22,7 @@ SPEC = LogSpec(n_events=2_000, n_keys=300, n_snapshot=200, epoch_size=500)
 def test_streaming_available_now_matches_golden(spark, tmp_path):
     log = write_log(spark, str(tmp_path / "log"), SPEC)
     cfg = EngineConfig(
-        log_dir=log, table_dir=str(tmp_path / "tbl"), write_metrics=False
+        log_dir=log, table_dir=str(tmp_path / "tbl")
     )
     run_available_now(spark, cfg, str(tmp_path / "ckpt"))
     t = LakeTable(spark, cfg.table_dir)
@@ -38,7 +38,7 @@ def test_streaming_available_now_matches_golden(spark, tmp_path):
 def test_streaming_restart_is_noop(spark, tmp_path):
     log = write_log(spark, str(tmp_path / "log"), SPEC)
     cfg = EngineConfig(
-        log_dir=log, table_dir=str(tmp_path / "tbl"), write_metrics=False
+        log_dir=log, table_dir=str(tmp_path / "tbl")
     )
     run_available_now(spark, cfg, str(tmp_path / "ckpt"))
     snap = LakeTable(spark, cfg.table_dir).current().snapshot_id
@@ -57,7 +57,7 @@ def test_streaming_graceful_stop_and_resume(spark, tmp_path):
 
     log = write_log(spark, str(tmp_path / "log"), SPEC)
     cfg = EngineConfig(
-        log_dir=log, table_dir=str(tmp_path / "tbl"), write_metrics=False
+        log_dir=log, table_dir=str(tmp_path / "tbl")
     )
     q = stream_log(
         spark,
@@ -136,7 +136,7 @@ def test_stream_after_batch_engine_does_not_skip(spark, tmp_path):
     # batch engine consumes the first half only (several epochs so
     # last_epoch_id > any early stream batch id)
     cfg = EngineConfig(
-        log_dir=log, table_dir=table_dir, write_metrics=False,
+        log_dir=log, table_dir=table_dir,
         max_events_per_batch=250, max_batches=4,
     )
     run(spark, cfg)
@@ -191,7 +191,7 @@ def test_streaming_mor_appends_deltas_and_compacts(spark, tmp_path):
 
     log = write_log(spark, str(tmp_path / "log"), SPEC)
     cfg = EngineConfig(
-        log_dir=log, table_dir=str(tmp_path / "tbl"), write_metrics=False
+        log_dir=log, table_dir=str(tmp_path / "tbl")
     )
     q = stream_log(
         spark,
@@ -229,7 +229,7 @@ def test_streaming_cow_mode_matches_golden(spark, tmp_path):
     """merge_mode='cow' keeps the read-optimized lww_guard rewrite."""
     log = write_log(spark, str(tmp_path / "log"), SPEC)
     cfg = EngineConfig(
-        log_dir=log, table_dir=str(tmp_path / "tbl"), write_metrics=False
+        log_dir=log, table_dir=str(tmp_path / "tbl")
     )
     run_available_now(spark, cfg, str(tmp_path / "ckpt"), merge_mode="cow")
     t = LakeTable(spark, cfg.table_dir)
@@ -258,7 +258,7 @@ def test_streaming_expiry_bounds_disk_to_table_size(spark, tmp_path):
 
     log = write_log(spark, str(tmp_path / "log"), SPEC)
     cfg = EngineConfig(
-        log_dir=log, table_dir=str(tmp_path / "tbl"), write_metrics=False
+        log_dir=log, table_dir=str(tmp_path / "tbl")
     )
     q = stream_log(
         spark,
@@ -316,7 +316,7 @@ def test_cadence_maintenance_race_does_not_kill_stream(
     monkeypatch.setattr(compact_mod, "compact", _boom)
     log = write_log(spark, str(tmp_path / "log"), SPEC)
     cfg = EngineConfig(
-        log_dir=log, table_dir=str(tmp_path / "tbl"), write_metrics=False
+        log_dir=log, table_dir=str(tmp_path / "tbl")
     )
     q = stream_log(
         spark,
@@ -361,7 +361,6 @@ def test_streaming_schema_only_pins_start_position(spark, tmp_path):
         log_dir=staged,
         table_dir=str(tmp_path / "tbl"),
         snapshot_mode="SCHEMA_ONLY",
-        write_metrics=False,
     )
     ck = str(tmp_path / "ckpt")
     run_available_now(spark, cfg, ck)

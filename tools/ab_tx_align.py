@@ -52,7 +52,6 @@ def main() -> None:
                     table_dir=tbl,
                     max_events_per_batch=1_000_000,
                     tx_align=tx_align,
-                    write_metrics=False,
                 ),
             )
             wall = time.time() - t0
