@@ -44,9 +44,6 @@ def main(argv: list[str] | None = None) -> int:
                    help="out-of-order-safe merge (LWW reduce + tombstones)")
     p.add_argument("--truncate-policy", default="apply",
                    choices=["apply", "drop"])
-    p.add_argument("--decode-mode", default="variant",
-                   choices=["variant", "native", "arrow"])
-    p.add_argument("--sha-mode", default="native", choices=["native", "arrow"])
     p.add_argument("--n-salts", type=int, default=0)
     p.add_argument("--db-include", default=None)
     p.add_argument("--db-exclude", default=None)
@@ -97,8 +94,6 @@ def main(argv: list[str] | None = None) -> int:
         merge_mode=args.merge_mode,
         lww_guard=args.lww_guard,
         truncate_policy=args.truncate_policy,
-        decode_mode=args.decode_mode,
-        sha_mode=args.sha_mode,
         n_salts=args.n_salts,
         db_include=args.db_include,
         db_exclude=args.db_exclude,

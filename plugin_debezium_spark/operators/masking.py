@@ -78,7 +78,6 @@ def ingest_transforms(
     key_cols: tuple[str, ...] = (),
     content_col: str = "content",
     sha_col: str = "content_sha256",
-    sha_mode: str = "native",
     strict: bool = True,
 ) -> DataFrame:
     """Capture-level application on a DECODED row frame (the engine's
@@ -133,7 +132,7 @@ def ingest_transforms(
         from plugin_debezium_spark.functions.hashing import content_sha256
 
         df = df.withColumn(
-            sha_col, content_sha256(F.col(content_col), sha_mode)
+            sha_col, content_sha256(F.col(content_col))
         )
     return df
 

@@ -39,6 +39,9 @@ from plugin_debezium_spark.plans.lake import LakeTable, _cast_to, bucket_expr
 # deduped key sets up to this many rows are broadcast for the
 # anti-join (keys are narrow; 2M × ~80B ≈ 160 MB driver-side)
 BROADCAST_KEY_LIMIT = 2_000_000
+# lower bound on rows per write task for a batch of known size (see
+# _bucket_partitioned)
+WRITE_ROWS_PER_TASK = 32_768
 
 
 def _bucket_partitioned(
@@ -59,23 +62,17 @@ def _bucket_partitioned(
     A tiny epoch otherwise launches touched×k near-empty write tasks
     whose scheduling + per-task commit dominate the merge (measured
     ~0.7 s per 18k-row write at 64 tasks, r07); capping partitions at
-    ceil(n_rows / rows_per_task) lets a small batch write in a few
-    tasks while a bench-scale epoch (≥ rows_per_task×touched rows)
-    keeps the full bucket-aligned width. Dynamic-partition writes
-    split each task by bucket dir, so the FILE layout stays one file
-    per (task, bucket) either way."""
-    import os
-
+    ceil(n_rows / WRITE_ROWS_PER_TASK) lets a small batch write in a
+    few tasks while a bench-scale epoch (≥ WRITE_ROWS_PER_TASK×touched
+    rows) keeps the full bucket-aligned width. Dynamic-partition
+    writes split each task by bucket dir, so the FILE layout stays one
+    file per (task, bucket) either way."""
     n = max(len(touched), 1)
     par = df.sparkSession.sparkContext.defaultParallelism
-    fanout = os.environ.get("SPARK_GRAFT_WRITE_FANOUT", "1") == "1"
-    k = max(1, -(-2 * par // n)) if fanout else 1
+    k = max(1, -(-2 * par // n))
     width = n * k
     if n_rows is not None:
-        rows_per_task = int(
-            os.environ.get("SPARK_GRAFT_WRITE_ROWS_PER_TASK", "32768")
-        )
-        width = min(width, max(1, -(-int(n_rows) // rows_per_task)))
+        width = min(width, max(1, -(-int(n_rows) // WRITE_ROWS_PER_TASK)))
     if width < n:
         # fewer tasks than buckets: plain hash-by-bucket keeps each
         # bucket whole inside one task (one file per bucket)
@@ -158,9 +155,6 @@ def merge_batch(
     broadcast_key_limit: int = BROADCAST_KEY_LIMIT,
     lww_guard: bool = False,
     mor: bool = False,
-    truncate_lsn: int | None = None,
-    assume_unique_keys: bool = False,
-    summary: dict | None = None,
 ) -> dict:
     """Apply one micro-batch of key columns + payload columns + ``op``.
 
@@ -171,17 +165,12 @@ def merge_batch(
     the touched-bucket set and key count in one tiny collect, then
     delegates to merge_prepared (the engine's epoch loop dedupes and
     computes those itself, in the same action as its schema inference).
-
-    assume_unique_keys: skip the LWW reduce when the caller has ALREADY
-    deduped to one row per key (the engine's json/arrow path does) —
-    otherwise the full-payload dedupe shuffle would run twice per
-    epoch. The default keeps raw batches safe.
     """
     prev = table.current()
     if prev.properties.get("last_epoch_id", -1) >= epoch_id:
         return {"skipped": True, "epoch_id": epoch_id}
     key_cols = list(prev.key_cols)
-    if not assume_unique_keys and "_lsn" in batch_latest.columns:
+    if "_lsn" in batch_latest.columns:
         from plugin_debezium_spark.operators.dedupe import latest_by_key
 
         keyed = batch_latest.withColumn("lsn", F.col("_lsn")).withColumn(
@@ -193,14 +182,6 @@ def merge_batch(
         batch_latest = latest_by_key(keyed, tuple(key_cols)).drop(
             "lsn", "ts_ms"
         )
-    if truncate_lsn is not None and "_lsn" in batch_latest.columns:
-        # winners superseded by the truncate point become deletes
-        batch_latest = batch_latest.withColumn(
-            op_col,
-            F.when(
-                F.col("_lsn") <= F.lit(int(truncate_lsn)), F.lit(OP_DELETE)
-            ).otherwise(F.col(op_col)),
-        )
     batch = batch_latest.withColumn(
         "_bucket", bucket_expr(key_cols, prev.n_buckets)
     ).cache()
@@ -211,10 +192,7 @@ def merge_batch(
         return merge_prepared(
             table,
             batch,
-            # a truncate touches every bucket (table-wide delete)
-            touched=list(range(prev.n_buckets))
-            if truncate_lsn is not None
-            else sorted(int(x) for x in agg["bs"]),
+            touched=sorted(int(x) for x in agg["bs"]),
             n_batch_keys=int(agg["n"]),
             epoch_id=epoch_id,
             last_lsn=last_lsn,
@@ -222,8 +200,6 @@ def merge_batch(
             broadcast_key_limit=broadcast_key_limit,
             lww_guard=lww_guard,
             mor=mor,
-            truncate_lsn=truncate_lsn,
-            summary=summary,
         )
     finally:
         batch.unpersist()

@@ -126,9 +126,7 @@ def apply_chunk(
     batch = src.select(
         *KEY_COLS,
         *payload_cols,
-        content_sha256(F.col("content"), cfg.sha_mode).alias(
-            "content_sha256"
-        ),
+        content_sha256(F.col("content")).alias("content_sha256"),
         pos.alias("_lsn"),
         pos.alias("_ts_ms"),
         F.lit("r").alias("op"),

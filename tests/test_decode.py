@@ -88,6 +88,22 @@ def test_arrow_vs_native_decode(spark):
     assert sorted(map(str, a)) == sorted(map(str, b))
 
 
+def test_arrow_sha_matches_native(spark):
+    """The vectorized sha256 kernel hashes UTF-8 bytes exactly as F.sha2
+    does, null staying null."""
+    from plugin_debezium_spark.functions.hashing import content_sha256
+
+    df = spark.createDataFrame(
+        [(None,), ("",), ("héllo wörld ✓ 日本語",), ("plain",)], "c string"
+    )
+    rows = df.select(
+        content_sha256("c", "arrow").alias("a"),
+        content_sha256("c", "native").alias("n"),
+    ).collect()
+    assert rows[0]["a"] is None
+    assert all(r["a"] == r["n"] for r in rows)
+
+
 def test_default_null_handling(spark):
     """Missing fields decode as null (the reference applies schema
     defaults, MapConverter.java:45-47; our sink default is null +

@@ -93,32 +93,6 @@ def test_schema_evolution_added_and_widened(spark, log_dir, tmp_path):
     assert df.filter(df.size_bytes > 2_147_483_647).count() > 0
 
 
-def test_arrow_decode_path_matches_native(spark, log_dir, tmp_path):
-    a = str(tmp_path / "ta")
-    b = str(tmp_path / "tb")
-    run(
-        spark,
-        EngineConfig(
-            log_dir=log_dir,
-            table_dir=a,
-            max_events_per_batch=2_000,
-            decode_mode="native",
-            sha_mode="native",
-        ),
-    )
-    run(
-        spark,
-        EngineConfig(
-            log_dir=log_dir,
-            table_dir=b,
-            max_events_per_batch=2_000,
-            decode_mode="arrow",
-            sha_mode="arrow",
-        ),
-    )
-    assert _final_hashes(spark, a) == _final_hashes(spark, b)
-
-
 def test_salted_dedupe_matches(spark, log_dir, tmp_path):
     table_dir = str(tmp_path / "tbl")
     run(
@@ -157,6 +131,10 @@ def test_sharded_appliers_union_equals_full(spark, log_dir, tmp_path):
     assert union == golden_key_hashes(read_log_pandas(log_dir))
 
 
+def _cached_rdds(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
 def test_max_duration_stops_cleanly(spark, log_dir, tmp_path):
     """L4 stop condition: an exhausted time budget applies nothing,
     leaves no cached leftovers, and a later run completes the replay."""
@@ -164,9 +142,7 @@ def test_max_duration_stops_cleanly(spark, log_dir, tmp_path):
     # the session is shared across the test module: assert run() adds
     # no cached leftovers, not that the whole session is cache-free
     # (earlier tests' localCheckpoints are released asynchronously)
-    cached_before = set(
-        spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
-    )
+    cached_before = _cached_rdds(spark)
     out = run(
         spark,
         EngineConfig(
@@ -177,10 +153,7 @@ def test_max_duration_stops_cleanly(spark, log_dir, tmp_path):
         ),
     )
     assert out["batches_applied"] == 0
-    cached_after = set(
-        spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
-    )
-    assert cached_after <= cached_before
+    assert _cached_rdds(spark) <= cached_before
     run(
         spark,
         EngineConfig(
@@ -262,6 +235,9 @@ def test_truncate_policy_drop_ignores(spark, trunc_log_dir, tmp_path):
 
 
 def test_truncate_raises_on_lww_guard(spark, trunc_log_dir, tmp_path):
+    """The raising epoch releases its winners, and the loop releases
+    the next epoch's prefetch that was in flight when it raised."""
+    cached_before = _cached_rdds(spark)
     with pytest.raises(ValueError, match="TRUNCATE"):
         run(
             spark,
@@ -270,6 +246,7 @@ def test_truncate_raises_on_lww_guard(spark, trunc_log_dir, tmp_path):
                 max_events_per_batch=1_000, lww_guard=True,
             ),
         )
+    assert _cached_rdds(spark) <= cached_before
 
 
 # --- stop conditions L4 (AbstractDebeziumTask.java:124-152,610-634) -------

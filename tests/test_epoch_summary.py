@@ -130,6 +130,13 @@ JOB_SPEC = LogSpec(
     n_events=20_000, n_keys=2_000, n_snapshot=2_000, epoch_size=5_000
 )
 JOBS_WITHOUT_METRICS = 64
+# Spark jobs of an INCREMENTAL run over the same log (a 3-file source
+# dump at a quarter of it: 3 chunks interleaved with 4 epochs), measured
+# while each INCREMENTAL epoch still ran through its own unpipelined
+# loop (local[4]). Folding the epochs into the prefetching loop moves
+# each epoch's prepare and stats off the main thread; it must not add
+# a job.
+JOBS_INCREMENTAL = 73
 
 
 def _last_job_id(sc, group: str) -> int:
@@ -141,21 +148,62 @@ def _last_job_id(sc, group: str) -> int:
     return max(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_epoch_summary_launches_no_extra_jobs(spark, tmp_path):
+def _source_dump(spark, log: str, out: str) -> tuple[str, int]:
+    """The source table's state at a quarter of the log (LWW of the
+    events up to it, the winner's position as src_lsn), in 3 files."""
+    df = spark.read.parquet(log)
+    s_pos = int(df.agg(F.max("lsn")).collect()[0][0] // 4)
+    w = (
+        df.filter(F.col("lsn") <= s_pos)
+        .groupBy(
+            F.col("key.repo").alias("repo"),
+            F.col("key.path").alias("path"),
+            F.col("key.commit").alias("commit"),
+        )
+        .agg(F.max_by(F.struct("op", "after_json", "lsn"), "lsn").alias("w"))
+        .filter(F.col("w.op") != "d")
+    )
+    w.select(
+        "repo",
+        "path",
+        "commit",
+        F.get_json_object("w.after_json", "$.lang").alias("lang"),
+        F.get_json_object("w.after_json", "$.content").alias("content"),
+        F.col("w.lsn").alias("src_lsn"),
+    ).repartition(3, "repo", "path", "commit").write.parquet(out)
+    return out, s_pos
+
+
+@pytest.mark.parametrize("mode", ["replay", "incremental"])
+def test_epoch_summary_launches_no_extra_jobs(spark, tmp_path, mode):
     log = write_log(spark, str(tmp_path / "log"), JOB_SPEC)
     cfg = EngineConfig(
         log_dir=log, table_dir=str(tmp_path / "tbl"), max_events_per_batch=5_000
     )
+    bound, n_epochs = JOBS_WITHOUT_METRICS, 4
+    if mode == "incremental":
+        src, s_pos = _source_dump(spark, log, str(tmp_path / "dump"))
+        cfg = dataclasses.replace(
+            cfg,
+            snapshot_mode="INCREMENTAL",
+            incremental_source_dir=src,
+            incremental_source_lsn=s_pos,
+            incremental_lsn_col="src_lsn",
+            incremental_chunk_rows=1,  # one chunk per file
+        )
+        bound = JOBS_INCREMENTAL
     sc = spark.sparkContext
     first = _last_job_id(sc, "summary-jobs-before")
     out = run(spark, cfg)
     last = _last_job_id(sc, "summary-jobs-after")
-    assert out["batches_applied"] == 4
-    assert last - first - 1 <= JOBS_WITHOUT_METRICS
+    assert out["batches_applied"] == n_epochs
+    if mode == "incremental":
+        assert out["chunks_applied"] == out["chunks_total"] == 3
+    assert last - first - 1 <= bound
     # history() is a driver-side local relation: no job until it is read
     hist = LakeTable(spark, cfg.table_dir).history()
     assert _last_job_id(sc, "summary-jobs-history") == last + 1
-    assert hist.filter(F.col("operation") == "epoch").count() == 4
+    assert hist.filter(F.col("operation") == "epoch").count() == n_epochs
     assert not os.path.exists(os.path.join(cfg.table_dir, "metrics"))
 
 

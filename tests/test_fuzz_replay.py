@@ -23,7 +23,7 @@ CONFIGS = [
     (
         LogSpec(n_events=8_000, n_keys=4_000, n_snapshot=2_000,
                 evolve_at=0.1, widen_at=0.2, epoch_size=2_000),
-        {"decode_mode": "native"},  # early evolution, from_json path
+        {},  # early evolution through the default (Variant) path
     ),
     (
         LogSpec(n_events=8_000, n_keys=500, n_snapshot=0, hot_pct=0,

@@ -201,9 +201,18 @@ def test_stop_and_resume_mid_bootstrap(spark, log_dir, dump, tmp_path):
     """max_records stops the run with chunks still pending; the rerun
     resumes at the committed chunk cursor and converges to golden."""
     table_dir = str(tmp_path / "tbl")
+    cached_before = set(
+        spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
+    )
     out1 = run(spark, _cfg(log_dir, dump, table_dir, max_records=1))
     assert out1["stop_reason"] == "max_records"
     assert out1["chunks_applied"] < out1["chunks_total"]
+    # the stop is taken at the chunk step ahead of an epoch whose
+    # winners were already prefetched: they are released, not cached
+    cached_after = set(
+        spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
+    )
+    assert cached_after <= cached_before
     done1 = int(
         LakeTable(spark, table_dir).current().properties.get(CHUNK_PROP, -1)
     )
