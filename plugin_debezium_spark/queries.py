@@ -152,32 +152,66 @@ def cdc_final_state_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def cdc_replay_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K1/K3/L1 — the REAL engine end-to-end: envelope log written to a
-    scratch dir, replayed through decode → dedupe → MERGE over multiple
-    epochs into the snapshot-atomic lake table; returns final state."""
+def _scratch_dir(prefix: str) -> str:
+    """A fresh scratch dir that outlives the query call (the driver
+    collects the returned DataFrame later) — reclaimed at interpreter
+    exit."""
+    import atexit
+    import shutil
     import tempfile
 
-    from plugin_debezium_spark.plans.lake import LakeTable
-    from plugin_debezium_spark.streaming.engine import EngineConfig, run
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, True)
+    return d
 
-    env = envelopes_from_events(spark, sf_dir)
+
+def _replay_fixture(
+    spark: SparkSession,
+    env: DataFrame,
+    prefix: str,
+    span: int = 2500,
+    op=None,
+    key=None,
+    after=None,
+    extra=(),
+) -> str:
+    """Write ``env`` as an envelope log at ``<dir>/log`` (``span`` LSNs
+    per ``lsn_bucket``) in a fresh scratch dir and return the dir.
+
+    Per-query deltas: ``op`` / ``key`` replace the op and key columns
+    (the ``after_json`` delete test stays on the INPUT op), ``after``
+    replaces the after-image struct, ``extra`` columns follow
+    ``source``.
+
+    Epoch counts: ``_replay(..., epochs=k)`` sizes epochs at
+    ``n // k + 1`` events, and ``plan_epochs`` closes an epoch only on
+    a whole ``span`` bucket. At sf0.01 (10k events, 4 buckets) that
+    target exceeds one bucket for every k, so the k=3 and k=4 replays
+    (final_state, mor, never, evolution, truncate, incremental) all
+    apply 2 epochs — incremental interleaves 3 chunks with them — and
+    snapshot_only applies 1. At sf0.1 (40 buckets) the same
+    arithmetic gives 4 epochs for k=4 and 3 for k=3."""
+    null_s = F.lit(None).cast("string")
+    bucket = (F.col("lsn") / span).cast("long")
     # spread the one-task events scan by log bucket BEFORE the wire
     # projection: the to_json doc-gen and the partitionBy write then
     # run across the cluster instead of serially inside the single
     # scan task, and each bucket still lands in exactly one file (r07)
-    log = env.repartition(
-        spark.sparkContext.defaultParallelism,
-        (F.col("lsn") / 2500).cast("long"),
-    ).select(
+    log = env.repartition(spark.sparkContext.defaultParallelism, bucket).select(
         "lsn",
         "ts_ms",
-        "op",
-        F.struct("repo", "path", "commit").alias("key"),
-        F.lit(None).cast("string").alias("before_json"),
-        F.when(F.col("op") == "d", F.lit(None).cast("string"))
+        (F.col("op") if op is None else op).alias("op"),
+        (F.struct("repo", "path", "commit") if key is None else key).alias(
+            "key"
+        ),
+        null_s.alias("before_json"),
+        F.when(F.col("op") == "d", null_s)
         .otherwise(
-            F.to_json(F.struct("repo", "path", "commit", "lang", "content"))
+            F.to_json(
+                F.struct("repo", "path", "commit", "lang", "content")
+                if after is None
+                else after
+            )
         )
         .alias("after_json"),
         F.struct(
@@ -186,37 +220,70 @@ def cdc_replay_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("false").alias("snapshot"),
             F.lit("events").alias("connector"),
         ).alias("source"),
+        *extra,
         F.lit(0).cast("long").alias("epoch_hint"),
-        (F.col("lsn") / 2500).cast("long").alias("lsn_bucket"),
+        bucket.alias("lsn_bucket"),
     )
-    d = tempfile.mkdtemp(prefix="cdc_replay_")
-    # scratch log+table must outlive this call (the driver collects the
-    # returned DataFrame later) — reclaim at interpreter exit
-    import atexit
-    import shutil
-
-    atexit.register(shutil.rmtree, d, True)
+    d = _scratch_dir(prefix)
     log.write.mode("overwrite").partitionBy("lsn_bucket").parquet(f"{d}/log")
-    # parquet count() is footer-only — cheap epoch sizing
-    n_events = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    cfg = EngineConfig(
-        log_dir=f"{d}/log",
-        table_dir=f"{d}/tbl",
-        # ~4 epochs at any scale factor (multi-epoch machinery without
-        # drowning a larger sf in per-epoch latency)
-        max_events_per_batch=max(2500, n_events // 4 + 1),
+    return d
+
+
+def _replay(spark: SparkSession, sf_dir: str, d: str, epochs, **cfg_delta):
+    """Run the engine over ``<d>/log`` into ``<d>/tbl`` and return the
+    LakeTable. ``cfg_delta`` is the query's EngineConfig delta; unless
+    it sets ``max_events_per_batch`` (then ``epochs`` is None), epochs
+    are sized at ``max(2500, n_events // epochs + 1)`` — see
+    ``_replay_fixture`` for the epoch counts that yields."""
+    from plugin_debezium_spark.plans.lake import LakeTable
+    from plugin_debezium_spark.streaming.engine import EngineConfig, run
+
+    if "max_events_per_batch" not in cfg_delta:
+        # parquet count() is footer-only — cheap epoch sizing
+        n_events = spark.read.parquet(f"{sf_dir}/events.parquet").count()
+        cfg_delta["max_events_per_batch"] = max(2500, n_events // epochs + 1)
+    run(
+        spark,
+        EngineConfig(log_dir=f"{d}/log", table_dir=f"{d}/tbl", **cfg_delta),
     )
-    run(spark, cfg)
-    t = LakeTable(spark, f"{d}/tbl")
-    return t.read().select(
+    return LakeTable(spark, f"{d}/tbl")
+
+
+def _replayed_state(table, *extra) -> DataFrame:
+    """A replayed table's final state in FINAL_STATE_SQL's columns
+    (``extra`` columns go before ``last_lsn``)."""
+    return table.read().select(
         "repo",
         "path",
         "commit",
         "lang",
         "content",
         "content_sha256",
+        *extra,
         F.col("_lsn").alias("last_lsn"),
     )
+
+
+def _relabel_snapshot_reads(env: DataFrame) -> DataFrame:
+    """The base log has no 'r' ops: creates in the first lsn-quartile
+    become snapshot reads (the same rule as the snapshot-mode
+    oracles)."""
+    q1 = int(env.agg(F.max("lsn")).collect()[0][0]) // 4
+    return env.withColumn(
+        "op",
+        F.when(
+            (F.col("op") == "c") & (F.col("lsn") < F.lit(q1)), F.lit("r")
+        ).otherwise(F.col("op")),
+    )
+
+
+def cdc_replay_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """K1/K3/L1 — the REAL engine end-to-end: envelope log written to a
+    scratch dir, replayed through decode → dedupe → MERGE over multiple
+    epochs into the snapshot-atomic lake table; returns final state."""
+    env = envelopes_from_events(spark, sf_dir)
+    d = _replay_fixture(spark, env, "cdc_replay_")
+    return _replayed_state(_replay(spark, sf_dir, d, 4))
 
 
 def cdc_replay_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -227,67 +294,15 @@ def cdc_replay_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     row for row. Exercises read-time LWW resolution before compaction
     implicitly (compact reads through _resolve_lww) and the
     post-compaction pure-base read."""
-    import atexit
-    import shutil
-    import tempfile
-
     from plugin_debezium_spark.plans.compact import compact
-    from plugin_debezium_spark.plans.lake import LakeTable
-    from plugin_debezium_spark.streaming.engine import EngineConfig, run
 
     env = envelopes_from_events(spark, sf_dir)
-    # spread the one-task events scan by log bucket BEFORE the wire
-    # projection: the to_json doc-gen and the partitionBy write then
-    # run across the cluster instead of serially inside the single
-    # scan task, and each bucket still lands in exactly one file (r07)
-    log = env.repartition(
-        spark.sparkContext.defaultParallelism,
-        (F.col("lsn") / 2500).cast("long"),
-    ).select(
-        "lsn",
-        "ts_ms",
-        "op",
-        F.struct("repo", "path", "commit").alias("key"),
-        F.lit(None).cast("string").alias("before_json"),
-        F.when(F.col("op") == "d", F.lit(None).cast("string"))
-        .otherwise(
-            F.to_json(F.struct("repo", "path", "commit", "lang", "content"))
-        )
-        .alias("after_json"),
-        F.struct(
-            F.lit("kestra").alias("db"),
-            F.lit("repofiles").alias("table"),
-            F.lit("false").alias("snapshot"),
-            F.lit("events").alias("connector"),
-        ).alias("source"),
-        F.lit(0).cast("long").alias("epoch_hint"),
-        (F.col("lsn") / 2500).cast("long").alias("lsn_bucket"),
-    )
-    d = tempfile.mkdtemp(prefix="cdc_mor_")
-    atexit.register(shutil.rmtree, d, True)
-    log.write.mode("overwrite").partitionBy("lsn_bucket").parquet(f"{d}/log")
-    n_events = spark.read.parquet(f"{sf_dir}/events.parquet").count()
+    d = _replay_fixture(spark, env, "cdc_mor_")
     max_lsn = env.agg(F.max("lsn")).collect()[0][0]
-    cfg = EngineConfig(
-        log_dir=f"{d}/log",
-        table_dir=f"{d}/tbl",
-        max_events_per_batch=max(2500, n_events // 4 + 1),
-        merge_mode="mor",
-        truncate_policy="drop",
-    )
-    run(spark, cfg)
-    t = LakeTable(spark, f"{d}/tbl")
+    t = _replay(spark, sf_dir, d, 4, merge_mode="mor", truncate_policy="drop")
     # log fully consumed → every tombstone is past the horizon
     compact(t, expire_tombstones_below_lsn=int(max_lsn) + 1)
-    return t.read().select(
-        "repo",
-        "path",
-        "commit",
-        "lang",
-        "content",
-        "content_sha256",
-        F.col("_lsn").alias("last_lsn"),
-    )
+    return _replayed_state(t)
 
 
 def cdc_replay_snapshot_never(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -298,69 +313,9 @@ def cdc_replay_snapshot_never(spark: SparkSession, sf_dir: str) -> DataFrame:
     winner. The base log has no 'r' ops, so creates in the first
     lsn-quartile are relabeled as snapshot reads (same rule in the
     oracle) — NEVER must actually drop rows here, not pass vacuously."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from plugin_debezium_spark.plans.lake import LakeTable
-    from plugin_debezium_spark.streaming.engine import EngineConfig, run
-
-    env = envelopes_from_events(spark, sf_dir)
-    q1 = int(env.agg(F.max("lsn")).collect()[0][0]) // 4
-    env = env.withColumn(
-        "op",
-        F.when(
-            (F.col("op") == "c") & (F.col("lsn") < F.lit(q1)), F.lit("r")
-        ).otherwise(F.col("op")),
-    )
-    # spread the one-task events scan by log bucket BEFORE the wire
-    # projection: the to_json doc-gen and the partitionBy write then
-    # run across the cluster instead of serially inside the single
-    # scan task, and each bucket still lands in exactly one file (r07)
-    log = env.repartition(
-        spark.sparkContext.defaultParallelism,
-        (F.col("lsn") / 2500).cast("long"),
-    ).select(
-        "lsn",
-        "ts_ms",
-        "op",
-        F.struct("repo", "path", "commit").alias("key"),
-        F.lit(None).cast("string").alias("before_json"),
-        F.when(F.col("op") == "d", F.lit(None).cast("string"))
-        .otherwise(
-            F.to_json(F.struct("repo", "path", "commit", "lang", "content"))
-        )
-        .alias("after_json"),
-        F.struct(
-            F.lit("kestra").alias("db"),
-            F.lit("repofiles").alias("table"),
-            F.lit("false").alias("snapshot"),
-            F.lit("events").alias("connector"),
-        ).alias("source"),
-        F.lit(0).cast("long").alias("epoch_hint"),
-        (F.col("lsn") / 2500).cast("long").alias("lsn_bucket"),
-    )
-    d = tempfile.mkdtemp(prefix="cdc_never_")
-    atexit.register(shutil.rmtree, d, True)
-    log.write.mode("overwrite").partitionBy("lsn_bucket").parquet(f"{d}/log")
-    n_events = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    cfg = EngineConfig(
-        log_dir=f"{d}/log",
-        table_dir=f"{d}/tbl",
-        max_events_per_batch=max(2500, n_events // 3 + 1),
-        snapshot_mode="NEVER",
-    )
-    run(spark, cfg)
-    t = LakeTable(spark, f"{d}/tbl")
-    return t.read().select(
-        "repo",
-        "path",
-        "commit",
-        "lang",
-        "content",
-        "content_sha256",
-        F.col("_lsn").alias("last_lsn"),
-    )
+    env = _relabel_snapshot_reads(envelopes_from_events(spark, sf_dir))
+    d = _replay_fixture(spark, env, "cdc_never_")
+    return _replayed_state(_replay(spark, sf_dir, d, 3, snapshot_mode="NEVER"))
 
 
 def cdc_replay_snapshot_only(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -371,68 +326,10 @@ def cdc_replay_snapshot_only(spark: SparkSession, sf_dir: str) -> DataFrame:
     then STOP before the remaining change stream (reference
     mysql/MysqlInterface.java:43-53 INITIAL_ONLY; engine clips the
     epoch plan at the snapshot end and skips tail-follow)."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from plugin_debezium_spark.plans.lake import LakeTable
-    from plugin_debezium_spark.streaming.engine import EngineConfig, run
-
-    env = envelopes_from_events(spark, sf_dir)
-    q1 = int(env.agg(F.max("lsn")).collect()[0][0]) // 4
-    env = env.withColumn(
-        "op",
-        F.when(
-            (F.col("op") == "c") & (F.col("lsn") < F.lit(q1)), F.lit("r")
-        ).otherwise(F.col("op")),
-    )
-    # spread the one-task events scan by log bucket BEFORE the wire
-    # projection: the to_json doc-gen and the partitionBy write then
-    # run across the cluster instead of serially inside the single
-    # scan task, and each bucket still lands in exactly one file (r07)
-    log = env.repartition(
-        spark.sparkContext.defaultParallelism,
-        (F.col("lsn") / 2500).cast("long"),
-    ).select(
-        "lsn",
-        "ts_ms",
-        "op",
-        F.struct("repo", "path", "commit").alias("key"),
-        F.lit(None).cast("string").alias("before_json"),
-        F.when(F.col("op") == "d", F.lit(None).cast("string"))
-        .otherwise(
-            F.to_json(F.struct("repo", "path", "commit", "lang", "content"))
-        )
-        .alias("after_json"),
-        F.struct(
-            F.lit("kestra").alias("db"),
-            F.lit("repofiles").alias("table"),
-            F.lit("false").alias("snapshot"),
-            F.lit("events").alias("connector"),
-        ).alias("source"),
-        F.lit(0).cast("long").alias("epoch_hint"),
-        (F.col("lsn") / 2500).cast("long").alias("lsn_bucket"),
-    )
-    d = tempfile.mkdtemp(prefix="cdc_snaponly_")
-    atexit.register(shutil.rmtree, d, True)
-    log.write.mode("overwrite").partitionBy("lsn_bucket").parquet(f"{d}/log")
-    n_events = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    cfg = EngineConfig(
-        log_dir=f"{d}/log",
-        table_dir=f"{d}/tbl",
-        max_events_per_batch=max(2500, n_events // 3 + 1),
-        snapshot_mode="INITIAL_ONLY",
-    )
-    run(spark, cfg)
-    t = LakeTable(spark, f"{d}/tbl")
-    return t.read().select(
-        "repo",
-        "path",
-        "commit",
-        "lang",
-        "content",
-        "content_sha256",
-        F.col("_lsn").alias("last_lsn"),
+    env = _relabel_snapshot_reads(envelopes_from_events(spark, sf_dir))
+    d = _replay_fixture(spark, env, "cdc_snaponly_")
+    return _replayed_state(
+        _replay(spark, sf_dir, d, 3, snapshot_mode="INITIAL_ONLY")
     )
 
 
@@ -450,17 +347,11 @@ def cdc_replay_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     is FINAL_STATE_SQL verbatim, which is exactly the DBLog
     correctness claim: chunked+interleaved bootstrap converges to the
     same state as an ordered replay."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from plugin_debezium_spark.plans.lake import LakeTable
-    from plugin_debezium_spark.streaming.engine import EngineConfig, run
-
     env = envelopes_from_events(spark, sf_dir)
     s_pos = int(env.agg(F.max("lsn")).collect()[0][0]) // 4
-    d = tempfile.mkdtemp(prefix="cdc_incr_")
-    atexit.register(shutil.rmtree, d, True)
+    # change log: the whole stream (the engine starts at S; pre-S
+    # events are already reflected in the dump)
+    d = _replay_fixture(spark, env, "cdc_incr_")
 
     # source-state dump at S: LWW over events ≤ S, winner position kept
     pre = env.filter(F.col("lsn") <= F.lit(s_pos))
@@ -478,66 +369,23 @@ def cdc_replay_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("w.lsn").alias("src_lsn"),
     )
     # multi-file dump → multiple footer-planned chunks actually
-    # interleave with the stream epochs below
+    # interleave with the stream epochs
     state0.repartition(6, "repo", "path", "commit").write.mode(
         "overwrite"
     ).parquet(f"{d}/src")
-
-    # change log: stream events only (the engine starts at S; pre-S
-    # events are already reflected in the dump)
-    # spread the one-task events scan by log bucket BEFORE the wire
-    # projection: the to_json doc-gen and the partitionBy write then
-    # run across the cluster instead of serially inside the single
-    # scan task, and each bucket still lands in exactly one file (r07)
-    log = env.repartition(
-        spark.sparkContext.defaultParallelism,
-        (F.col("lsn") / 2500).cast("long"),
-    ).select(
-        "lsn",
-        "ts_ms",
-        "op",
-        F.struct("repo", "path", "commit").alias("key"),
-        F.lit(None).cast("string").alias("before_json"),
-        F.when(F.col("op") == "d", F.lit(None).cast("string"))
-        .otherwise(
-            F.to_json(F.struct("repo", "path", "commit", "lang", "content"))
-        )
-        .alias("after_json"),
-        F.struct(
-            F.lit("kestra").alias("db"),
-            F.lit("repofiles").alias("table"),
-            F.lit("false").alias("snapshot"),
-            F.lit("events").alias("connector"),
-        ).alias("source"),
-        F.lit(0).cast("long").alias("epoch_hint"),
-        (F.col("lsn") / 2500).cast("long").alias("lsn_bucket"),
-    )
-    log.write.mode("overwrite").partitionBy("lsn_bucket").parquet(f"{d}/log")
-
-    n_events = spark.read.parquet(f"{sf_dir}/events.parquet").count()
     n_src = state0.count()
-    cfg = EngineConfig(
-        log_dir=f"{d}/log",
-        table_dir=f"{d}/tbl",
-        # ~3 stream epochs × ~3 chunks so the interleave actually runs
-        max_events_per_batch=max(2500, n_events // 3 + 1),
+    t = _replay(
+        spark,
+        sf_dir,
+        d,
+        3,
         snapshot_mode="INCREMENTAL",
         incremental_source_dir=f"{d}/src",
         incremental_source_lsn=s_pos,
         incremental_lsn_col="src_lsn",
         incremental_chunk_rows=max(1, n_src // 3 + 1),
     )
-    run(spark, cfg)
-    t = LakeTable(spark, f"{d}/tbl")
-    return t.read().select(
-        "repo",
-        "path",
-        "commit",
-        "lang",
-        "content",
-        "content_sha256",
-        F.col("_lsn").alias("last_lsn"),
-    )
+    return _replayed_state(t)
 
 
 def cdc_replay_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -549,78 +397,23 @@ def cdc_replay_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     schemas and the consumer follows), so the final table has the new
     column — populated exactly where the LWW winner is a post-cutoff
     event, null for rows last written by the old schema."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from plugin_debezium_spark.plans.lake import LakeTable
-    from plugin_debezium_spark.streaming.engine import EngineConfig, run
-
     env = envelopes_from_events(spark, sf_dir)
     cut = int(env.agg(F.max("lsn")).collect()[0][0]) // 2
-    # spread the one-task events scan by log bucket BEFORE the wire
-    # projection: the to_json doc-gen and the partitionBy write then
-    # run across the cluster instead of serially inside the single
-    # scan task, and each bucket still lands in exactly one file (r07)
-    log = env.repartition(
-        spark.sparkContext.defaultParallelism,
-        (F.col("lsn") / 2500).cast("long"),
-    ).select(
-        "lsn",
-        "ts_ms",
-        "op",
-        F.struct("repo", "path", "commit").alias("key"),
-        F.lit(None).cast("string").alias("before_json"),
-        F.when(F.col("op") == "d", F.lit(None).cast("string"))
-        .otherwise(
-            # to_json drops null fields: pre-cutoff images have NO
-            # stars key at all — a true v1-schema wire image
-            F.to_json(
-                F.struct(
-                    "repo",
-                    "path",
-                    "commit",
-                    "lang",
-                    "content",
-                    F.when(
-                        F.col("lsn") >= F.lit(cut),
-                        F.pmod(F.col("lsn"), F.lit(50)),
-                    ).alias("stars"),
-                )
-            )
-        )
-        .alias("after_json"),
-        F.struct(
-            F.lit("kestra").alias("db"),
-            F.lit("repofiles").alias("table"),
-            F.lit("false").alias("snapshot"),
-            F.lit("events").alias("connector"),
-        ).alias("source"),
-        F.lit(0).cast("long").alias("epoch_hint"),
-        (F.col("lsn") / 2500).cast("long").alias("lsn_bucket"),
-    )
-    d = tempfile.mkdtemp(prefix="cdc_evolve_")
-    atexit.register(shutil.rmtree, d, True)
-    log.write.mode("overwrite").partitionBy("lsn_bucket").parquet(f"{d}/log")
-    n_events = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    cfg = EngineConfig(
-        log_dir=f"{d}/log",
-        table_dir=f"{d}/tbl",
-        # ≥2 epochs either side of the cutoff so the widening happens
-        # MID-replay, not in the first epoch
-        max_events_per_batch=max(2500, n_events // 4 + 1),
-    )
-    run(spark, cfg)
-    t = LakeTable(spark, f"{d}/tbl")
-    return t.read().select(
+    # to_json drops null fields: pre-cutoff images have NO stars key at
+    # all — a true v1-schema wire image
+    after = F.struct(
         "repo",
         "path",
         "commit",
         "lang",
         "content",
-        "content_sha256",
-        F.col("stars").cast("long").alias("stars"),
-        F.col("_lsn").alias("last_lsn"),
+        F.when(F.col("lsn") >= F.lit(cut), F.pmod(F.col("lsn"), F.lit(50))).alias(
+            "stars"
+        ),
+    )
+    d = _replay_fixture(spark, env, "cdc_evolve_", after=after)
+    return _replayed_state(
+        _replay(spark, sf_dir, d, 4), F.col("stars").cast("long").alias("stars")
     )
 
 
@@ -631,71 +424,22 @@ def cdc_replay_truncate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Under ordered replay a truncate at LSN T is a table-wide delete:
     only keys whose winning event is newer than the latest truncate
     survive."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from plugin_debezium_spark.plans.lake import LakeTable
-    from plugin_debezium_spark.streaming.engine import EngineConfig, run
-
     env = envelopes_from_events(spark, sf_dir)
     is_t = (F.col("op") == "d") & (F.pmod(F.col("lsn"), F.lit(5)) == 0)
     null_s = F.lit(None).cast("string")
-    # spread the one-task events scan by log bucket BEFORE the wire
-    # projection: the to_json doc-gen and the partitionBy write then
-    # run across the cluster instead of serially inside the single
-    # scan task, and each bucket still lands in exactly one file (r07)
-    log = env.repartition(
-        spark.sparkContext.defaultParallelism,
-        (F.col("lsn") / 2500).cast("long"),
-    ).select(
-        "lsn",
-        "ts_ms",
-        F.when(is_t, F.lit("t")).otherwise(F.col("op")).alias("op"),
-        F.when(
+    d = _replay_fixture(
+        spark,
+        env,
+        "cdc_trunc_",
+        op=F.when(is_t, F.lit("t")).otherwise(F.col("op")),
+        key=F.when(
             is_t,
             F.struct(
                 null_s.alias("repo"), null_s.alias("path"), null_s.alias("commit")
             ),
-        )
-        .otherwise(F.struct("repo", "path", "commit"))
-        .alias("key"),
-        null_s.alias("before_json"),
-        F.when(F.col("op") == "d", null_s)
-        .otherwise(
-            F.to_json(F.struct("repo", "path", "commit", "lang", "content"))
-        )
-        .alias("after_json"),
-        F.struct(
-            F.lit("kestra").alias("db"),
-            F.lit("repofiles").alias("table"),
-            F.lit("false").alias("snapshot"),
-            F.lit("events").alias("connector"),
-        ).alias("source"),
-        F.lit(0).cast("long").alias("epoch_hint"),
-        (F.col("lsn") / 2500).cast("long").alias("lsn_bucket"),
+        ).otherwise(F.struct("repo", "path", "commit")),
     )
-    d = tempfile.mkdtemp(prefix="cdc_trunc_")
-    atexit.register(shutil.rmtree, d, True)
-    log.write.mode("overwrite").partitionBy("lsn_bucket").parquet(f"{d}/log")
-    n_events = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    cfg = EngineConfig(
-        log_dir=f"{d}/log",
-        table_dir=f"{d}/tbl",
-        # 3 epochs: truncates in later epochs must kill earlier keys
-        max_events_per_batch=max(2500, n_events // 3 + 1),
-    )
-    run(spark, cfg)
-    t = LakeTable(spark, f"{d}/tbl")
-    return t.read().select(
-        "repo",
-        "path",
-        "commit",
-        "lang",
-        "content",
-        "content_sha256",
-        F.col("_lsn").alias("last_lsn"),
-    )
+    return _replayed_state(_replay(spark, sf_dir, d, 3))
 
 
 def cdc_replay_tx_aligned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -711,73 +455,25 @@ def cdc_replay_tx_aligned(spark: SparkSession, sf_dir: str) -> DataFrame:
     only. The oracle recomputes the cut in closed form — the first
     bucket's max LSN, lowered past any transaction spanning it — and
     LWWs up to it."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from plugin_debezium_spark.plans.lake import LakeTable
-    from plugin_debezium_spark.streaming.engine import EngineConfig, run
-
     env = envelopes_from_events(spark, sf_dir)
-    null_s = F.lit(None).cast("string")
     tx_seq = ((F.col("lsn") + 5) / 10).cast("long")
-    # spread the one-task events scan by log bucket BEFORE the wire
-    # projection: the to_json doc-gen and the partitionBy write then
-    # run across the cluster instead of serially inside the single
-    # scan task, and each bucket still lands in exactly one file (r07)
-    log = env.repartition(
-        spark.sparkContext.defaultParallelism,
-        (F.col("lsn") / 400).cast("long"),
-    ).select(
-        "lsn",
-        "ts_ms",
-        "op",
-        F.struct("repo", "path", "commit").alias("key"),
-        null_s.alias("before_json"),
-        F.when(F.col("op") == "d", null_s)
-        .otherwise(
-            F.to_json(F.struct("repo", "path", "commit", "lang", "content"))
-        )
-        .alias("after_json"),
-        F.struct(
-            F.lit("kestra").alias("db"),
-            F.lit("repofiles").alias("table"),
-            F.lit("false").alias("snapshot"),
-            F.lit("events").alias("connector"),
-        ).alias("source"),
-        F.struct(
-            F.concat(F.lit("tx"), tx_seq.cast("string")).alias("id"),
-            (F.pmod(F.col("lsn") + 5, F.lit(10)) + 1)
-            .cast("long")
-            .alias("total_order"),
-            (F.pmod(F.col("lsn") + 5, F.lit(10)) + 1)
-            .cast("long")
-            .alias("data_collection_order"),
-        ).alias("transaction"),
-        F.lit(0).cast("long").alias("epoch_hint"),
-        (F.col("lsn") / 400).cast("long").alias("lsn_bucket"),
-    )
-    d = tempfile.mkdtemp(prefix="cdc_txalign_")
-    atexit.register(shutil.rmtree, d, True)
-    log.write.mode("overwrite").partitionBy("lsn_bucket").parquet(f"{d}/log")
-    cfg = EngineConfig(
-        log_dir=f"{d}/log",
-        table_dir=f"{d}/tbl",
+    tx_pos = (F.pmod(F.col("lsn") + 5, F.lit(10)) + 1).cast("long")
+    transaction = F.struct(
+        F.concat(F.lit("tx"), tx_seq.cast("string")).alias("id"),
+        tx_pos.alias("total_order"),
+        tx_pos.alias("data_collection_order"),
+    ).alias("transaction")
+    d = _replay_fixture(spark, env, "cdc_txalign_", span=400, extra=(transaction,))
+    t = _replay(
+        spark,
+        sf_dir,
+        d,
+        None,
         max_events_per_batch=400,  # one bucket per epoch
         max_batches=1,
         tx_align=True,
     )
-    run(spark, cfg)
-    t = LakeTable(spark, f"{d}/tbl")
-    return t.read().select(
-        "repo",
-        "path",
-        "commit",
-        "lang",
-        "content",
-        "content_sha256",
-        F.col("_lsn").alias("last_lsn"),
-    )
+    return _replayed_state(t)
 
 
 def cdc_sqlite_live(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -791,21 +487,15 @@ def cdc_sqlite_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ORIGINAL events — the whole capture pipeline (trigger images,
     consistent offsets, LSN minting, replay) must be transparent.
     last_lsn is excluded: capture mints its own audit LSNs."""
-    import atexit
-    import shutil
     import sqlite3
-    import tempfile
 
-    from plugin_debezium_spark.plans.lake import LakeTable
     from plugin_debezium_spark.sources.sqlite_connector import (
         SqliteSource,
         capture_to_log,
         install_cdc,
     )
-    from plugin_debezium_spark.streaming.engine import EngineConfig, run
 
-    d = tempfile.mkdtemp(prefix="cdc_sqlite_")
-    atexit.register(shutil.rmtree, d, True)
+    d = _scratch_dir("cdc_sqlite_")
     db = f"{d}/live.db"
     con = sqlite3.connect(db)
     con.execute(
@@ -850,16 +540,9 @@ def cdc_sqlite_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     capture_to_log(
         spark, src, f"{d}/log", bucket_size=65536, snapshot_mode="NEVER"
     )
-    cfg = EngineConfig(
-        log_dir=f"{d}/log",
-        table_dir=f"{d}/tbl",
-        max_events_per_batch=1_000_000,
-    )
-    run(spark, cfg)
-    return (
-        LakeTable(spark, f"{d}/tbl")
-        .read()
-        .select("repo", "path", "commit", "lang", "content", "content_sha256")
+    t = _replay(spark, sf_dir, d, None, max_events_per_batch=1_000_000)
+    return t.read().select(
+        "repo", "path", "commit", "lang", "content", "content_sha256"
     )
 
 
@@ -911,10 +594,12 @@ def cdc_route_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream_counts(env)
 
 
-def cdc_inline_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P2/P5 — INLINE flatten: DELETE takes the before image."""
+def _enveloped(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The nested-image envelope the shaper queries start from: before
+    images on u/d (content prefixed ``prev:``), after images on
+    non-deletes."""
     env = envelopes_from_events(spark, sf_dir)
-    enveloped = env.select(
+    return env.select(
         "lsn",
         "ts_ms",
         "op",
@@ -940,9 +625,13 @@ def cdc_inline_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("x").alias("connector"),
         ).alias("source"),
     )
+
+
+def cdc_inline_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """P2/P5 — INLINE flatten: DELETE takes the before image."""
     from plugin_debezium_spark.operators.shape import inline
 
-    return inline(enveloped).select(
+    return inline(_enveloped(spark, sf_dir)).select(
         "repo", "path", "commit", "lang", "content", "op", "lsn"
     )
 
@@ -958,33 +647,7 @@ def cdc_deleted_policy_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     from plugin_debezium_spark.operators.filters import Deleted
     from plugin_debezium_spark.operators.shape import add_deleted, inline
 
-    env = envelopes_from_events(spark, sf_dir)
-    enveloped = env.select(
-        "lsn",
-        "ts_ms",
-        "op",
-        F.struct("repo", "path", "commit").alias("key"),
-        F.when(
-            F.col("op").isin("u", "d"),
-            F.struct(
-                "repo",
-                "path",
-                "commit",
-                "lang",
-                F.concat(F.lit("prev:"), F.col("content")).alias("content"),
-            ),
-        ).alias("before"),
-        F.when(
-            F.col("op") != "d",
-            F.struct("repo", "path", "commit", "lang", "content"),
-        ).alias("after"),
-        F.struct(
-            F.lit("kestra").alias("db"),
-            F.lit("repofiles").alias("table"),
-            F.lit("false").alias("snapshot"),
-            F.lit("x").alias("connector"),
-        ).alias("source"),
-    )
+    enveloped = _enveloped(spark, sf_dir)
 
     def _shaped(policy: Deleted, tag: str) -> DataFrame:
         return add_deleted(inline(enveloped, policy)).select(
@@ -1018,34 +681,7 @@ def cdc_wrap_key_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
         wrap,
     )
 
-    env = envelopes_from_events(spark, sf_dir)
-    enveloped = env.select(
-        "lsn",
-        "ts_ms",
-        "op",
-        F.struct("repo", "path", "commit").alias("key"),
-        F.when(
-            F.col("op").isin("u", "d"),
-            F.struct(
-                "repo",
-                "path",
-                "commit",
-                "lang",
-                F.concat(F.lit("prev:"), F.col("content")).alias("content"),
-            ),
-        ).alias("before"),
-        F.when(
-            F.col("op") != "d",
-            F.struct("repo", "path", "commit", "lang", "content"),
-        ).alias("after"),
-        F.struct(
-            F.lit("kestra").alias("db"),
-            F.lit("repofiles").alias("table"),
-            F.lit("false").alias("snapshot"),
-            F.lit("x").alias("connector"),
-        ).alias("source"),
-    )
-    shaped = add_key(add_deleted(wrap(enveloped)))
+    shaped = add_key(add_deleted(wrap(_enveloped(spark, sf_dir))))
     return shaped.select(
         F.col("record.lang").alias("r_lang"),
         F.col("record.content").alias("r_content"),
@@ -1352,10 +988,6 @@ def cdc_replay_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     retained snapshots. Net per-key changes (c/u/d on the unique _lsn
     version comparator); the oracle computes the same full-outer diff
     of the two LWW cutoffs in SQL."""
-    import atexit
-    import shutil
-    import tempfile
-
     from plugin_debezium_spark.plans.diff import table_diff
     from plugin_debezium_spark.plans.merge import merge_batch
     from plugin_debezium_spark.streaming.engine import (
@@ -1387,8 +1019,7 @@ def cdc_replay_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hi = int(rows.agg(F.max("_lsn")).collect()[0][0])
     t1 = hi // 2
-    d = tempfile.mkdtemp(prefix="cdc_diff_")
-    atexit.register(shutil.rmtree, d, True)
+    d = _scratch_dir("cdc_diff_")
     cfg = EngineConfig(
         log_dir=f"{d}/nolog", table_dir=f"{d}/tbl"
     )
@@ -1756,9 +1387,10 @@ QUERIES = {
 QUERIES.update(DATA_QUERIES)
 
 # The driver's correctness harness checks (at most) the FIRST 50
-# registry entries; the registry holds 54. Keep every distinct
-# operator's canonical query inside that window and park the four
-# oracle-twin variants at the tail — each twin's canonical form holds
+# registry entries; the registry holds 69. Keep every distinct
+# operator's canonical query inside that window and park the 19
+# oracle-twin variants at the tail (the first at index 50) — each
+# twin's canonical form holds
 # a driver row and the twins stay verifiable via tools/check_oracles.py
 # plus the pytest SQL-agreement suite
 # (test_dataops.py::test_numpy_impls_agree_with_sql, dedupe window-vs-

@@ -44,6 +44,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from plugin_debezium_spark.models import KEY_COLS
+from plugin_debezium_spark.sources.log_reader import bucket_dirs
 
 
 class Dialect:
@@ -410,11 +411,12 @@ def _log_offset(spark: SparkSession, log_dir: str) -> tuple[int, int]:
         return int(o["n_snap"]), int(o["last_audit"])
     except FileNotFoundError:
         pass
-    try:
-        df = spark.read.parquet(log_dir)
-    except Exception:
+    # fresh = no partition written yet; anything else is read, and an
+    # unreadable log raises rather than passing for fresh (a re-snapshot
+    # from LSN 0 would mint duplicate lsns into it)
+    if not os.path.isdir(log_dir) or not bucket_dirs(log_dir):
         return 0, -1
-    row = df.agg(
+    row = spark.read.parquet(log_dir).agg(
         F.coalesce(
             F.sum(F.when(F.col("op") == "r", 1).otherwise(0)), F.lit(0)
         ).alias("n_snap"),

@@ -31,7 +31,6 @@ def plan_epochs(
     log_dir: str,
     last_lsn: int,
     max_events_per_batch: int,
-    ramp_first: bool = False,
 ) -> list[dict]:
     """Split remaining log into LSN ranges of ~max_events_per_batch.
 
@@ -40,32 +39,22 @@ def plan_epochs(
     log because it reads only the ``lsn`` column of unapplied buckets.
     Returns [{"lo": exclusive, "hi": inclusive, "buckets": [...]}, ...]
     — the bucket list lets the epoch read prune partitions outright.
-
-    ramp_first: size the FIRST epoch at ~1/8 of the batch target so the
-    pipelined engine's one unhidden parse+dedupe is small. Measured
-    net-negative at bench scale (the extra epoch's fixed costs exceed
-    the saving) — default off, kept for very large epochs where the
-    tradeoff flips.
     """
     stats = _bucket_stats(log_dir, last_lsn)
     epochs: list[dict] = []
     lo = last_lsn
     acc = 0
     buckets: list[int] = []
-    target = (
-        max(1, max_events_per_batch // 8) if ramp_first else max_events_per_batch
-    )
     for bucket, n, hi in stats:
         acc += n
         buckets.append(bucket)
-        if acc >= target:
+        if acc >= max_events_per_batch:
             epochs.append({"lo": lo, "hi": hi, "buckets": buckets, "n": acc})
             lo = hi
             acc = 0
             # epochs close on bucket boundaries (hi = bucket max), so
             # the closed bucket is fully consumed
             buckets = []
-            target = max_events_per_batch
     if acc > 0:
         epochs.append(
             {"lo": lo, "hi": stats[-1][2], "buckets": buckets, "n": acc}
@@ -85,6 +74,16 @@ def log_high_water_mark(log_dir: str) -> int:
     except FileNotFoundError:
         return -1
     return max((hi for _, _, hi in stats), default=-1)
+
+
+def bucket_dirs(log_dir: str) -> list[str]:
+    """The log's ``lsn_bucket=`` partition dir names, sorted (raises
+    FileNotFoundError for an absent log dir)."""
+    import os
+
+    return [
+        n for n in sorted(os.listdir(log_dir)) if n.startswith("lsn_bucket=")
+    ]
 
 
 def _bucket_stats(log_dir: str, last_lsn: int) -> list[tuple[int, int, int]]:
@@ -149,9 +148,7 @@ def _bucket_stats(log_dir: str, last_lsn: int) -> list[tuple[int, int, int]]:
             return (bucket, n, hi)
         return None
 
-    names = [
-        n for n in sorted(os.listdir(log_dir)) if n.startswith("lsn_bucket=")
-    ]
+    names = bucket_dirs(log_dir)
     with ThreadPoolExecutor(max_workers=min(16, max(len(names), 1))) as ex:
         out = [r for r in ex.map(_scan_bucket, names) if r is not None]
     return sorted(out)

@@ -39,6 +39,12 @@ from plugin_debezium_spark.sources.log_reader import (
     read_range,
 )
 
+# envelope logs are highly compressible (JSON payloads): a 10 MB
+# parquet split expands to ~100 MB of parse work, so scan splits
+# must be much smaller than the 128 MB default or a micro-batch
+# collapses into a handful of tasks and stops scaling with cores
+SCAN_PARTITION_BYTES = 8 * 1024 * 1024
+
 
 def _plan(spark, cfg, last_lsn: int) -> list[dict]:
     """plan_epochs + the optional transaction-boundary alignment."""
@@ -153,11 +159,6 @@ class EngineConfig:
     # sources/log_reader.align_epochs_to_transactions for contract
     # and limits.
     tx_align: bool = False
-    # envelope logs are highly compressible (JSON payloads): a 10 MB
-    # parquet split expands to ~100 MB of parse work, so scan splits
-    # must be much smaller than the 128 MB default or a micro-batch
-    # collapses into a handful of tasks and stops scaling with cores
-    scan_partition_bytes: int = 8 * 1024 * 1024
     # out-of-order-safe merge (LWW reduce + tombstones); required when
     # batches may not arrive in LSN order (streaming file source)
     lww_guard: bool = False
@@ -688,7 +689,7 @@ def run(spark: SparkSession, cfg: EngineConfig) -> dict:
     t0 = time.time()
     prev_split = spark.conf.get("spark.sql.files.maxPartitionBytes", None)
     spark.conf.set(
-        "spark.sql.files.maxPartitionBytes", str(cfg.scan_partition_bytes)
+        "spark.sql.files.maxPartitionBytes", str(SCAN_PARTITION_BYTES)
     )
     try:
         return _run_inner(spark, cfg, t0)

@@ -19,6 +19,7 @@ from plugin_debezium_spark.sources.dbapi_connector import (
     DbApiSource,
     MongoDialect,
     SqliteDialect,
+    _log_offset,
     _offset_path,
     capture_to_log,
     install_cdc,
@@ -149,6 +150,21 @@ def test_offset_loss_snapshot_only_refuses_resnapshot(spark, tmp_path):
     os.remove(_offset_path(log))
     with pytest.raises(RuntimeError, match="Refusing to re-snapshot"):
         capture_to_log(spark, src, log, bucket_size=500)
+
+
+def test_unreadable_log_is_not_fresh(spark, tmp_path):
+    """A log dir with a written partition that cannot be read must
+    raise, not report a fresh (0, -1) offset — a fresh capture would
+    re-snapshot from LSN 0 into it. Only a dir with no partition is
+    fresh."""
+    assert _log_offset(spark, str(tmp_path / "absent")) == (0, -1)
+    log = tmp_path / "log"
+    log.mkdir()
+    assert _log_offset(spark, str(log)) == (0, -1)
+    (log / "lsn_bucket=0").mkdir()
+    (log / "lsn_bucket=0" / "part-0.parquet").write_bytes(b"not parquet")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        _log_offset(spark, str(log))
 
 
 def test_offset_loss_with_tail_resumes_tail_only(spark, tmp_path):

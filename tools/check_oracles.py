@@ -58,6 +58,13 @@ def main() -> int:
     import __spark_entry__ as entry_mod
     from plugin_debezium_spark.session import get_spark
 
+    qs = entry_mod.queries()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        # a misspelt name would otherwise check nothing and pass
+        print(f"unknown queries: {' '.join(unknown)}", file=sys.stderr)
+        return 2
+
     spark = get_spark("check_oracles", cores=8)
     con = duckdb.connect()
     for t in TABLES:
@@ -65,7 +72,6 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
 
-    qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     failures = 0
     for name, fn in qs.items():
