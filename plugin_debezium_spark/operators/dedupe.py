@@ -97,7 +97,7 @@ def latest_by_key_twopass(
     envelope log's lsn contract) — a duplicate could smuggle another
     key's loser through the semi-join. No explicit broadcast hint: a
     hint never falls back, so a large winner set would OOM the driver
-    (the engine's own path gates on winner_broadcast_limit after
+    (the engine's own path gates on WINNER_BROADCAST_LIMIT after
     COUNTING winners — prepare_latest); here AQE converts the semi
     join to broadcast at runtime when the winner side turns out
     small."""

@@ -70,6 +70,57 @@ def hash_mask_columns(
     return df
 
 
+def applicable_transforms(
+    types: dict[str, str],
+    truncate: dict[str, int] | None = None,
+    mask: dict[str, int] | None = None,
+    hash_salt: dict[str, str] | None = None,
+    key_cols: tuple[str, ...] = (),
+    strict: bool = True,
+) -> tuple[dict, dict, dict]:
+    """The one rule set for capture-side column transforms, shared by
+    decoded rows (:func:`ingest_transforms`) and per-row envelope
+    delivery (streaming/realtime.stream_rows). ``types`` maps each
+    column present to its ``simpleString`` type. Returns the three
+    transform maps restricted to present columns.
+
+    Key columns are refused loudly: masking a primary-key component
+    breaks key identity/bucketing (Debezium's own masking on a pk would
+    corrupt topic compaction the same way). A column absent from
+    ``types`` raises when ``strict``; otherwise it is skipped — an
+    epoch that predates an evolved column simply has nothing to
+    transform yet, and Debezium too ignores transform properties for
+    columns a table lacks. Debezium's column transforms apply to
+    CHARACTER-BASED columns only; a sha/'***' over a numeric column
+    would silently null out under the table-schema cast, so a present
+    non-string column is refused."""
+    named = set(truncate or {}) | set(mask or {}) | set(hash_salt or {})
+    bad = named & set(key_cols)
+    if bad:
+        raise ValueError(
+            f"column transforms must not touch key columns {sorted(bad)}: "
+            "masking a key component breaks LWW identity and bucketing"
+        )
+    missing = named - set(types)
+    if missing and strict:
+        raise ValueError(
+            f"column transforms name absent columns {sorted(missing)} "
+            f"(payload columns: {sorted(types)})"
+        )
+    non_str = sorted(c for c in named - missing if types[c] != "string")
+    if non_str:
+        raise ValueError(
+            f"column transforms apply to string columns only, got "
+            f"{ {c: types[c] for c in non_str} } — Debezium's "
+            "truncate/mask/mask.hash are character-column transforms"
+        )
+
+    def have(d):
+        return {k: v for k, v in (d or {}).items() if k in types}
+
+    return have(truncate), have(mask), have(hash_salt)
+
+
 def ingest_transforms(
     df: DataFrame,
     truncate: dict[str, int] | None = None,
@@ -86,49 +137,20 @@ def ingest_transforms(
     Debezium's connector-side semantics. If ``content_col`` is
     transformed, ``sha_col`` is recomputed over the TRANSFORMED value —
     the row identity follows what was ingested, and a plaintext must
-    not leak through its own hash. Key columns are refused loudly:
-    masking a primary-key component breaks key identity/bucketing
-    (Debezium's own masking on a pk would corrupt topic compaction the
-    same way)."""
-    named = set()
-    for d in (truncate, mask, hash_salt):
-        named |= set(d or {})
-    bad = named & set(key_cols)
-    if bad:
-        raise ValueError(
-            f"column transforms must not touch key columns {sorted(bad)}: "
-            "masking a key component breaks LWW identity and bucketing"
-        )
-    missing = named - set(df.columns)
-    if missing and strict:
-        raise ValueError(
-            f"column transforms name absent columns {sorted(missing)} "
-            f"(decoded payload columns: {sorted(df.columns)})"
-        )
-    if missing:
-        # engine path (strict=False): an epoch that predates an evolved
-        # column simply has nothing to transform yet — Debezium too
-        # ignores transform properties for columns a table lacks
-        named -= missing
-        have = lambda d: {  # noqa: E731
-            k: v for k, v in (d or {}).items() if k in df.columns
-        }
-        truncate, mask, hash_salt = have(truncate), have(mask), have(hash_salt)
-    # Debezium's column transforms apply to CHARACTER-BASED columns
-    # only; here a sha/'***' over a numeric column would silently null
-    # out under the table-schema cast — refuse instead
-    types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    non_str = sorted(c for c in named if types.get(c) != "string")
-    if non_str:
-        raise ValueError(
-            f"column transforms apply to string columns only, got "
-            f"{ {c: types[c] for c in non_str} } — Debezium's "
-            "truncate/mask/mask.hash are character-column transforms"
-        )
-    df = truncate_columns(df, truncate or {})
-    df = mask_columns(df, mask or {})
-    df = hash_mask_columns(df, hash_salt or {})
-    if content_col in named and sha_col in df.columns:
+    not leak through its own hash. Which columns may be transformed:
+    :func:`applicable_transforms` (the engine passes strict=False)."""
+    truncate, mask, hash_salt = applicable_transforms(
+        {f.name: f.dataType.simpleString() for f in df.schema.fields},
+        truncate,
+        mask,
+        hash_salt,
+        key_cols,
+        strict,
+    )
+    df = truncate_columns(df, truncate)
+    df = mask_columns(df, mask)
+    df = hash_mask_columns(df, hash_salt)
+    if content_col in {*truncate, *mask, *hash_salt} and sha_col in df.columns:
         from plugin_debezium_spark.functions.hashing import content_sha256
 
         df = df.withColumn(

@@ -14,7 +14,7 @@ Physical strategy (what makes it scale):
 2. only touched buckets of the target are read (manifest-level file
    pruning — at 100 TB a micro-batch reads a sliver of the table).
 3. survivors = target ⟕anti broadcast(batch keys): when the deduped
-   key set is broadcastable (≤ broadcast_key_limit rows), the target
+   key set is broadcastable (≤ BROADCAST_KEY_LIMIT rows), the target
    data NEVER shuffles — the anti-join runs map-side over the bucket
    files and survivors are written back partition-aligned. Upserts
    (batch rows) take the only shuffle: one bucket-repartition.
@@ -151,8 +151,6 @@ def merge_batch(
     batch_latest: DataFrame,
     epoch_id: int,
     last_lsn: int,
-    op_col: str = "op",
-    broadcast_key_limit: int = BROADCAST_KEY_LIMIT,
     lww_guard: bool = False,
     mor: bool = False,
 ) -> dict:
@@ -196,8 +194,6 @@ def merge_batch(
             n_batch_keys=int(agg["n"]),
             epoch_id=epoch_id,
             last_lsn=last_lsn,
-            op_col=op_col,
-            broadcast_key_limit=broadcast_key_limit,
             lww_guard=lww_guard,
             mor=mor,
         )
@@ -212,8 +208,6 @@ def merge_prepared(
     n_batch_keys: int,
     epoch_id: int,
     last_lsn: int,
-    op_col: str = "op",
-    broadcast_key_limit: int = BROADCAST_KEY_LIMIT,
     lww_guard: bool = False,
     mor: bool = False,
     truncate_lsn: int | None = None,
@@ -222,7 +216,8 @@ def merge_prepared(
 ) -> dict:
     """Core MERGE. ``batch`` must be deduped (one row per key), carry
     ``_bucket``, and be cached by the caller (it is consumed by up to
-    two write jobs).
+    two write jobs). The three modes below share every step and differ
+    only in the rows they write.
 
     epoch_key: which snapshot property scopes the idempotence guard.
     The batch engine uses the default shared counter; a streaming
@@ -249,230 +244,129 @@ def merge_prepared(
     ignoring the event.
 
     mor=True (merge-on-read): the epoch APPENDS the batch as delta
-    files — no target read, no survivors rewrite; epoch cost is
-    O(batch) regardless of table size (Iceberg-v2-style). Readers
-    resolve LWW per key at scan time (LakeTable._resolve_lww) and
-    compaction folds deltas back into base files. Inherently safe
-    under out-of-order delivery (deletes persist as tombstones).
+    files (deletes as ``_deleted`` tombstones) — no target read, no
+    survivors rewrite; epoch cost is O(batch) regardless of table size
+    (Iceberg-v2-style). Readers resolve LWW per key at scan time
+    (LakeTable._resolve_lww) and compaction folds deltas back into
+    base files. Inherently safe under out-of-order delivery.
 
     lww_guard=False (default): epochs are applied in LSN order (the
     batch engine's contract), so batch rows unconditionally win — the
     fast path (no-shuffle survivors + one batch shuffle).
 
     lww_guard=True: batches may arrive out of LSN order (the streaming
-    file source delivers files in listing order). The merge becomes a
-    LWW reduce over target ∪ batch on (_lsn, _ts_ms), and deletes are
-    RETAINED as tombstones (_deleted=true) so a late-arriving stale
-    insert cannot resurrect a deleted key. One shuffle of
-    target+batch; a compaction pass can purge tombstones older than
-    the max-disorder window.
+    file source delivers files in listing order). The touched buckets
+    are rewritten as LakeTable._resolve_lww over target ∪ batch, and
+    deletes are RETAINED as tombstones (_deleted=true) so a
+    late-arriving stale insert cannot resurrect a deleted key. One
+    shuffle of target+batch; a compaction pass can purge tombstones
+    older than the max-disorder window.
     """
     prev = table.current()
     if int(prev.properties.get(epoch_key, -1)) >= epoch_id:
         # idempotent replay: already committed (reference re-run==0)
         return {"skipped": True, "epoch_id": epoch_id}
-
-    key_cols = list(prev.key_cols)
-    payload_schema = T.StructType(
-        [
-            f
-            for f in batch.schema.fields
-            if f.name not in (op_col, "_bucket")
-        ]
-    )
-    new_schema, changes = evolve_schema(prev.schema(), payload_schema)
-    nb = prev.n_buckets
-
-    bset = set(touched)
-    target_files = [f for f in prev.files if f["bucket"] in bset]
-
-    if truncate_lsn is not None and (mor or lww_guard):
+    tombstones = mor or lww_guard
+    if truncate_lsn is not None and tombstones:
         raise ValueError(
             "TRUNCATE is only supported on the ordered copy-on-write "
             "path (set truncate_policy='drop' to ignore 't' events on "
             "mor/lww_guard pipelines)"
         )
-    if mor:
-        return _merge_mor(
-            table,
-            batch,
-            touched,
-            n_batch_keys,
-            epoch_id,
-            last_lsn,
-            prev,
-            new_schema,
-            changes,
-            op_col,
-            epoch_key,
-            summary,
-        )
-    if lww_guard:
-        return _merge_lww_guard(
-            table,
-            batch,
-            touched,
-            n_batch_keys,
-            epoch_id,
-            last_lsn,
-            prev,
-            new_schema,
-            changes,
-            target_files,
-            op_col,
-            epoch_key,
-            summary,
+
+    key_cols = list(prev.key_cols)
+    payload_schema = T.StructType(
+        [f for f in batch.schema.fields if f.name not in ("op", "_bucket")]
+    )
+    new_schema, changes = evolve_schema(prev.schema(), payload_schema)
+    names = {f.name for f in new_schema.fields}
+    if tombstones and "_deleted" not in names:
+        raise ValueError(
+            f"{'merge-on-read' if mor else 'lww_guard'} requires a table "
+            "with a _deleted tombstone column"
         )
 
-    upserts = _cast_to(batch.filter(F.col(op_col) != OP_DELETE), new_schema)
-    if "_deleted" in {f.name for f in new_schema.fields}:
-        upserts = upserts.withColumn("_deleted", F.lit(False))
-    upserts = upserts.withColumn("_bucket", bucket_expr(key_cols, nb))
-    # the only full-row shuffle in the merge: batch rows → bucket
-    # layout. Write tasks fan out beyond one-per-bucket when the
-    # cluster has more slots than touched buckets (k salted sub-tasks
-    # per bucket → k files per bucket dir): with exactly n_buckets
-    # reduce tasks, wave imbalance serializes the write at high core
-    # counts (measured: 64 tasks beat 32 by 1.5x at 16 cores).
-    upserts = _bucket_partitioned(upserts, touched, key_cols, n_batch_keys)
+    def bucketed(df: DataFrame) -> DataFrame:
+        return df.withColumn("_bucket", bucket_expr(key_cols, prev.n_buckets))
 
-    survivors = None
+    replaced = set() if mor else set(touched)  # mor only appends
+    target_files = [f for f in prev.files if f["bucket"] in replaced]
+    target = None
     if target_files:
         target = _cast_to(
             table._read_files(prev, target_files, None), new_schema
         )
-        if any(f.get("kind", "base") == "delta" for f in target_files):
-            # mixed-mode table: earlier MOR epochs left delta files in
-            # the touched buckets. A plain anti-join would copy
-            # base+delta duplicates (and resurrect tombstoned keys)
-            # into the new base files — resolve LWW first, exactly as
-            # compaction does, so the rewritten buckets are clean base.
-            target = table._resolve_lww(target, prev)
-        if truncate_lsn is not None:
-            # table-wide delete: rows last written at or before the
-            # truncate point do not survive (pushed filter, no shuffle)
-            target = target.filter(F.col("_lsn") > F.lit(int(truncate_lsn)))
-        keys = batch.select(*key_cols)
-        if n_batch_keys <= broadcast_key_limit:
-            # target data never shuffles: map-side anti-join against
-            # the broadcast key set, written back partition-aligned
-            survivors = target.join(
-                F.broadcast(keys), on=key_cols, how="left_anti"
-            )
-        else:
+    n_rows, survivors = n_batch_keys, None
+    if tombstones:
+        rows = _cast_to(
+            batch.withColumn("_deleted", F.col("op") == OP_DELETE), new_schema
+        )
+        # a late batch never moves the committed offset back
+        last_lsn = max(int(last_lsn), int(prev.properties.get("last_lsn", -1)))
+    if mor:
+        tag = "delta"
+    elif lww_guard:
+        tag, n_rows = "lww", None
+        if target is not None:
+            rows = rows.unionByName(target)
+        rows = table._resolve_lww(rows, prev)
+    else:
+        tag = "ups"
+        rows = _cast_to(batch.filter(F.col("op") != OP_DELETE), new_schema)
+        if "_deleted" in names:
+            rows = rows.withColumn("_deleted", F.lit(False))
+        if target is not None:
+            if any(f.get("kind", "base") == "delta" for f in target_files):
+                # mixed-mode table: earlier MOR epochs left delta files
+                # in the touched buckets. A plain anti-join would copy
+                # base+delta duplicates (and resurrect tombstoned keys)
+                # into the new base files — resolve LWW first, exactly
+                # as compaction does, so the rewritten buckets are
+                # clean base.
+                target = table._resolve_lww(target, prev)
+            if truncate_lsn is not None:
+                # table-wide delete: rows last written at or before the
+                # truncate point do not survive (pushed filter, no
+                # shuffle)
+                target = target.filter(
+                    F.col("_lsn") > F.lit(int(truncate_lsn))
+                )
+            keys = batch.select(*key_cols)
+            if n_batch_keys <= BROADCAST_KEY_LIMIT:
+                # target data never shuffles: map-side anti-join against
+                # the broadcast key set, written back partition-aligned
+                keys = F.broadcast(keys)
             survivors = target.join(keys, on=key_cols, how="left_anti")
-        survivors = survivors.withColumn("_bucket", bucket_expr(key_cols, nb))
 
-    # the two write jobs are independent — submit them concurrently so
-    # neither's stage gaps idle the cluster (same trick a streaming
-    # runtime uses for sibling sinks)
+    # the written rows → bucket layout (the ordered merge's only
+    # full-row shuffle). Write tasks fan out beyond one-per-bucket when
+    # the cluster has more slots than touched buckets (k salted
+    # sub-tasks per bucket → k files per bucket dir): with exactly
+    # n_buckets reduce tasks, wave imbalance serializes the write at
+    # high core counts (measured: 64 tasks beat 32 by 1.5x at 16 cores).
+    writes = [
+        (_bucket_partitioned(bucketed(rows), touched, key_cols, n_rows), tag)
+    ]
+    if survivors is not None:
+        writes.append((bucketed(survivors), "keep"))
+
+    # the ordered merge's two write jobs are independent — submit them
+    # concurrently so neither's stage gaps idle the cluster (same trick
+    # a streaming runtime uses for sibling sinks)
     from concurrent.futures import ThreadPoolExecutor
 
-    def _write(args):
-        df, tag = args
-        return table.write_bucket_data(df, prev.snapshot_id + 1, tag=tag)
+    def _write(w):
+        df, tag = w
+        # mor writes delta files; the rest keep the default base kind
+        extra = {"kind": "delta"} if mor else {}
+        return table.write_bucket_data(
+            df, prev.snapshot_id + 1, tag=tag, **extra
+        )
 
-    jobs = [(upserts, "ups")]
-    if survivors is not None:
-        jobs.append((survivors, "keep"))
-    with ThreadPoolExecutor(max_workers=2) as ex:
-        results = list(ex.map(_write, jobs))
-    new_files = [f for r in results for f in r]
+    with ThreadPoolExecutor(max_workers=len(writes)) as ex:
+        new_files = [f for r in ex.map(_write, writes) for f in r]
 
     return _commit_merge(
-        table, prev, new_files, bset, new_schema, changes, epoch_key,
+        table, prev, new_files, replaced, new_schema, changes, epoch_key,
         epoch_id, last_lsn, touched, n_batch_keys, summary,
-    )
-
-
-def _merge_mor(
-    table: LakeTable,
-    batch: DataFrame,
-    touched: list[int],
-    n_batch_keys: int,
-    epoch_id: int,
-    last_lsn: int,
-    prev,
-    new_schema: T.StructType,
-    changes: list[str],
-    op_col: str,
-    epoch_key: str = "last_epoch_id",
-    summary: dict | None = None,
-) -> dict:
-    """Append-only epoch: deduped batch → delta files (deletes as
-    tombstones); one bucket shuffle, zero target I/O."""
-    key_cols = list(prev.key_cols)
-    nb = prev.n_buckets
-    if "_deleted" not in {f.name for f in new_schema.fields}:
-        raise ValueError(
-            "merge-on-read requires a table with a _deleted tombstone column"
-        )
-    deltas = _cast_to(
-        batch.withColumn("_deleted", F.col(op_col) == OP_DELETE), new_schema
-    ).withColumn("_bucket", bucket_expr(key_cols, nb))
-    deltas = _bucket_partitioned(deltas, touched, key_cols, n_batch_keys)
-    new_files = table.write_bucket_data(
-        deltas, prev.snapshot_id + 1, tag="delta", kind="delta"
-    )
-    return _commit_merge(
-        table, prev, new_files, set(),  # append-only: nothing replaced
-        new_schema, changes, epoch_key, epoch_id,
-        max(int(last_lsn), int(prev.properties.get("last_lsn", -1))),
-        touched, n_batch_keys, summary,
-    )
-
-
-def _merge_lww_guard(
-    table: LakeTable,
-    batch: DataFrame,
-    touched: list[int],
-    n_batch_keys: int,
-    epoch_id: int,
-    last_lsn: int,
-    prev,
-    new_schema: T.StructType,
-    changes: list[str],
-    target_files: list[dict],
-    op_col: str,
-    epoch_key: str = "last_epoch_id",
-    summary: dict | None = None,
-) -> dict:
-    """Out-of-order-safe merge: LWW reduce over target ∪ batch with
-    tombstone retention (see merge_prepared docstring)."""
-    from plugin_debezium_spark.operators.dedupe import latest_by_key
-
-    key_cols = list(prev.key_cols)
-    nb = prev.n_buckets
-    names = {f.name for f in new_schema.fields}
-    if "_deleted" not in names:
-        raise ValueError(
-            "lww_guard requires a table with a _deleted tombstone column"
-        )
-
-    b = _cast_to(
-        batch.withColumn("_deleted", F.col(op_col) == OP_DELETE), new_schema
-    )
-    sides = [b]
-    if target_files:
-        sides.append(
-            _cast_to(table._read_files(prev, target_files, None), new_schema)
-        )
-    both = sides[0]
-    for s in sides[1:]:
-        both = both.unionByName(s)
-    both = both.withColumn("lsn", F.col("_lsn")).withColumn(
-        "ts_ms", F.col("_ts_ms")
-    )
-    winners = latest_by_key(both, tuple(key_cols)).drop("lsn", "ts_ms")
-    winners = _bucket_partitioned(
-        winners.withColumn("_bucket", bucket_expr(key_cols, nb)),
-        touched,
-        key_cols,
-    )
-    new_files = table.write_bucket_data(winners, prev.snapshot_id + 1, tag="lww")
-    return _commit_merge(
-        table, prev, new_files, set(touched), new_schema, changes,
-        epoch_key, epoch_id,
-        max(int(last_lsn), int(prev.properties.get("last_lsn", -1))),
-        touched, n_batch_keys, summary,
     )

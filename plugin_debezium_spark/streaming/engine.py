@@ -44,6 +44,16 @@ from plugin_debezium_spark.sources.log_reader import (
 # must be much smaller than the 128 MB default or a micro-batch
 # collapses into a handful of tasks and stops scaling with cores
 SCAN_PARTITION_BYTES = 8 * 1024 * 1024
+# two-pass dedupe: pass 1 shuffles only (key, lsn) to find winner
+# LSNs, pass 2 broadcast-semi-joins on lsn BEFORE parsing — the
+# 1.5 KB payloads never shuffle and losers are never JSON-parsed.
+# Candidate when the epoch's event count ≤ TWOPASS_DEDUPE_LIMIT;
+# committed only after pass 1 counts the ACTUAL winners ≤
+# WINNER_BROADCAST_LIMIT (a 6.4M-winner broadcast OOMs an 8g
+# driver — found by the 64M soak). Otherwise the one-pass
+# partial-aggregate dedupe runs.
+TWOPASS_DEDUPE_LIMIT = 20_000_000
+WINNER_BROADCAST_LIMIT = 2_000_000
 
 
 def _plan(spark, cfg, last_lsn: int) -> list[dict]:
@@ -174,16 +184,6 @@ class EngineConfig:
     #   with ZERO target I/O — epoch cost independent of table size;
     #   readers LWW-resolve at scan time, compaction folds deltas back).
     merge_mode: str = "cow"
-    # two-pass dedupe: pass 1 shuffles only (key, lsn) to find winner
-    # LSNs, pass 2 broadcast-semi-joins on lsn BEFORE parsing — the
-    # 1.5 KB payloads never shuffle and losers are never JSON-parsed.
-    # Candidate when the epoch's event count ≤ twopass_dedupe_limit;
-    # committed only after pass 1 counts the ACTUAL winners ≤
-    # winner_broadcast_limit (a 6.4M-winner broadcast OOMs an 8g
-    # driver — found by the 64M soak). Otherwise the one-pass
-    # partial-aggregate dedupe runs.
-    twopass_dedupe_limit: int = 20_000_000
-    winner_broadcast_limit: int = 2_000_000
     # horizontal sharding: (shard_count, shard_index) — this applier
     # processes only keys with hash(key) % count == index. N appliers
     # with disjoint shards ingest one stream in parallel (the standard
@@ -197,6 +197,24 @@ class EngineConfig:
     # data-layer reclaim boundary (plans/fs.LocalDataFS default):
     # batch data-file deletes for snapshot expiry off-POSIX.
     data_fs: object | None = None
+
+    def __post_init__(self):
+        # a misspelled mode must fail here, not silently run another
+        # one (e.g. merge_mode="MOR" applying copy-on-write)
+        self.snapshot_mode = (self.snapshot_mode or "INITIAL").upper()
+        for name, allowed in (
+            ("snapshot_mode", ("INITIAL", "INITIAL_ONLY", "NEVER", "ALWAYS",
+                               "INCREMENTAL", "WHEN_NEEDED", "RECOVERY",
+                               "SCHEMA_ONLY_RECOVERY", "SCHEMA_ONLY",
+                               "NO_DATA")),
+            ("merge_mode", ("cow", "mor")),
+            ("truncate_policy", ("apply", "drop")),
+        ):
+            if getattr(self, name) not in allowed:
+                raise ValueError(
+                    f"EngineConfig.{name} must be one of {allowed}, "
+                    f"got {getattr(self, name)!r}"
+                )
 
 
 def ensure_table(spark: SparkSession, cfg: EngineConfig) -> LakeTable:
@@ -302,7 +320,7 @@ def filter_events(cfg: EngineConfig, events: DataFrame) -> DataFrame:
     events = drop_ddl(events)
     if cfg.truncate_policy == "drop":
         events = events.filter(F.col("op") != OP_TRUNCATE)
-    if (cfg.snapshot_mode or "INITIAL").upper() in (
+    if cfg.snapshot_mode in (
         "NEVER",
         "INCREMENTAL",
         "SCHEMA_ONLY",
@@ -399,7 +417,7 @@ def prepare_latest(
     if (
         cfg.n_salts <= 1
         and n_events is not None
-        and n_events <= cfg.twopass_dedupe_limit
+        and n_events <= TWOPASS_DEDUPE_LIMIT
     ):
         # two-pass dedupe: payloads never shuffle, losers never parse.
         # pass 1 reads only key+lsn+op columns (column pruning: no
@@ -419,7 +437,7 @@ def prepare_latest(
             F.count("*").alias("k"), F.sum("_nraw").alias("nraw")
         ).collect()[0]
         n_winners = int(g["k"])
-        if n_winners <= cfg.winner_broadcast_limit:
+        if n_winners <= WINNER_BROADCAST_LIMIT:
             winner_lsns = pass1.select("lsn")
             # CONTRACT: lsn is unique per event (models.envelope_log_schema;
             # sources/debezium_json.import_to_log enforces it on import) —
@@ -825,7 +843,7 @@ def _run_inner(spark: SparkSession, cfg: EngineConfig, t0: float) -> dict:
     last_lsn = int(props.get("last_lsn", -1))
     next_epoch = int(props.get("last_epoch_id", -1)) + 1
 
-    mode = (cfg.snapshot_mode or "INITIAL").upper()
+    mode = cfg.snapshot_mode
     if mode == "WHEN_NEEDED":
         # real WHEN_NEEDED semantics (MysqlInterface.java:43-53):
         # snapshot iff no valid offsets exist. Our offsets are the

@@ -90,14 +90,12 @@ def stream_log(
     import dataclasses
     import hashlib
 
-    if merge_mode == "mor":
-        cfg = dataclasses.replace(cfg, merge_mode="mor", lww_guard=False)
-    elif merge_mode == "cow":
-        # the file source delivers files in listing order, not LSN
-        # order — a COW merge must be the out-of-order-safe variant
-        cfg = dataclasses.replace(cfg, merge_mode="cow", lww_guard=True)
-    else:
-        raise ValueError(f"merge_mode must be 'mor' or 'cow': {merge_mode}")
+    # the file source delivers files in listing order, not LSN order —
+    # a COW merge must be the out-of-order-safe variant (EngineConfig
+    # refuses any merge_mode but "mor" and "cow")
+    cfg = dataclasses.replace(
+        cfg, merge_mode=merge_mode, lww_guard=merge_mode == "cow"
+    )
     table = ensure_table(spark, cfg)
     ck = hashlib.sha256(checkpoint_dir.encode()).hexdigest()[:12]
     epoch_key = f"stream_epoch:{ck}"
@@ -110,7 +108,7 @@ def stream_log(
     # empty log (pin=-1), the property's presence being the
     # first-start marker; checkpoint-scoped like the epoch key.
     pin = -1
-    mode = (cfg.snapshot_mode or "INITIAL").upper()
+    mode = cfg.snapshot_mode
     if mode in ("SCHEMA_ONLY", "NO_DATA"):
         from plugin_debezium_spark.plans.lake import ConcurrentCommitError
         from plugin_debezium_spark.sources.log_reader import (
@@ -287,7 +285,7 @@ def stream_rows(
         Deleted.ADD_FIELD if deleted_policy is None else deleted_policy
     )
     fs = LocalMetaFS()
-    mode = (cfg.snapshot_mode or "INITIAL").upper()
+    mode = cfg.snapshot_mode
 
     def _read_offset() -> int | None:
         if not fs.exists(checkpoint_path):
@@ -347,51 +345,24 @@ def stream_rows(
         if cfg.column_truncate or cfg.column_mask or cfg.column_mask_hash:
             # capture-side column transforms apply to per-row delivery
             # too (Debezium masks in the connector, upstream of the
-            # RealtimeTrigger): BOTH images, fields present in this
-            # epoch's inferred schema, string-typed only (the engine's
-            # character-column rule), key columns refused
+            # RealtimeTrigger): BOTH images, under the engine's rules
+            # over this epoch's inferred schema
             from plugin_debezium_spark.models import KEY_COLS
             from plugin_debezium_spark.operators.masking import (
+                applicable_transforms,
                 mask_envelope_images,
             )
 
-            named = (
-                set(cfg.column_truncate or {})
-                | set(cfg.column_mask or {})
-                | set(cfg.column_mask_hash or {})
+            truncate, mask, hash_salt = applicable_transforms(
+                {f.name: f.dataType.simpleString() for f in schema.fields},
+                cfg.column_truncate,
+                cfg.column_mask,
+                cfg.column_mask_hash,
+                key_cols=KEY_COLS,
+                strict=False,
             )
-            bad = named & set(KEY_COLS)
-            if bad:
-                raise ValueError(
-                    f"column transforms must not touch key columns "
-                    f"{sorted(bad)}"
-                )
-            types = {
-                f.name: f.dataType.simpleString() for f in schema.fields
-            }
-            # match ingest_transforms' character-column rule: a column
-            # PRESENT in this epoch but typed non-string must fail
-            # loudly, not silently emit unmasked (r6 advice) — only
-            # columns absent from the epoch are skipped (an epoch that
-            # predates an evolved column has nothing to transform yet)
-            non_str = sorted(
-                c for c in named if c in types and types[c] != "string"
-            )
-            if non_str:
-                raise ValueError(
-                    f"column transforms apply to string columns only, "
-                    f"got { {c: types[c] for c in non_str} } — "
-                    "Debezium's truncate/mask/mask.hash are "
-                    "character-column transforms"
-                )
-            have = lambda d: {  # noqa: E731
-                k: v for k, v in (d or {}).items() if k in types
-            }
             typed = mask_envelope_images(
-                typed,
-                truncate=have(cfg.column_truncate),
-                mask=have(cfg.column_mask),
-                hash_salt=have(cfg.column_mask_hash),
+                typed, truncate=truncate, mask=mask, hash_salt=hash_salt
             )
         if fmt == "raw":
             return _shape.raw(typed).orderBy(F.col("value.lsn"))

@@ -249,6 +249,24 @@ def test_truncate_raises_on_lww_guard(spark, trunc_log_dir, tmp_path):
     assert _cached_rdds(spark) <= cached_before
 
 
+@pytest.mark.parametrize(
+    "field, value",
+    [("truncate_policy", "Drop"), ("merge_mode", "MOR"), ("snapshot_mode", "NEVR")],
+)
+def test_config_refuses_misspelled_modes(field, value):
+    """A misspelled mode used to run silently as another one:
+    truncate_policy="Drop" committed the keyless TRUNCATE pseudo-rows
+    as data, merge_mode="MOR" ran copy-on-write, and
+    snapshot_mode="NEVR" ran INITIAL."""
+    with pytest.raises(ValueError, match=f"EngineConfig.{field}"):
+        EngineConfig(log_dir="x", table_dir="y", **{field: value})
+
+
+def test_config_upper_cases_snapshot_mode():
+    assert EngineConfig("x", "y", snapshot_mode="never").snapshot_mode == "NEVER"
+    assert EngineConfig("x", "y", snapshot_mode=None).snapshot_mode == "INITIAL"
+
+
 # --- stop conditions L4 (AbstractDebeziumTask.java:124-152,610-634) -------
 
 
@@ -715,12 +733,12 @@ def test_snapshot_mode_always_resnapshots_without_regression(
     "kwargs",
     [
         {},  # two-pass dedupe path (raw count from pass 1)
-        {"twopass_dedupe_limit": 0},  # one-pass extra-sum path
-        {"twopass_dedupe_limit": 0, "n_salts": 4},  # salted two-phase
+        {"one_pass": True},  # one-pass extra-sum path
+        {"one_pass": True, "n_salts": 4},  # salted two-phase
     ],
 )
 def test_max_records_counts_consumed_events_not_winners(
-    spark, tmp_path, kwargs
+    spark, tmp_path, monkeypatch, kwargs
 ):
     """Reference parity (AbstractDebeziumTask.java:617-621): maxRecords
     counts change events CONSUMED. A duplicate-heavy log (1000 events,
@@ -728,6 +746,11 @@ def test_max_records_counts_consumed_events_not_winners(
     counting LWW winners (≤50/epoch) would never reach the cap."""
     import uuid
 
+    from plugin_debezium_spark.streaming import engine
+
+    kwargs = dict(kwargs)
+    if kwargs.pop("one_pass", False):
+        monkeypatch.setattr(engine, "TWOPASS_DEDUPE_LIMIT", 0)
     d = tmp_path / uuid.uuid4().hex[:8]
     log = write_log(
         spark,

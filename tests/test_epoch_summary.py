@@ -6,8 +6,8 @@ commitInfo, Iceberg's snapshot summary) and is read back with
    swap leaves neither behind, the resumed run commits both, and the
    history has one row per epoch over contiguous LSN slices;
 2. its counts ride the epoch's one stats action (``_epoch_agg``), so a
-   default replay launches no more Spark jobs than it did with the old
-   separate metrics writes switched off;
+   replay launches no more Spark jobs than it did with the old
+   separate metrics writes switched off, in every merge mode;
 3. the grouped stats action folds per-(op, stream) schemas on the
    driver to exactly the type one global ``schema_of_variant_agg``
    infers;
@@ -122,14 +122,21 @@ def test_summary_commits_atomically_with_the_epoch(
     assert not os.path.exists(os.path.join(cfg.table_dir, "metrics"))
 
 
-# Spark jobs a 4-epoch replay of JOB_SPEC launched while lineage was
-# still written by separate per-epoch metrics writes, measured with
-# those writes switched off (92 with them on; the same at local[4] and
-# local[8]). The summary must not add a job.
+# Spark jobs a 4-epoch replay of JOB_SPEC launches through the ordered
+# copy-on-write merge: 64 while lineage was still written by separate
+# per-epoch metrics writes, measured with those writes switched off (92
+# with them on); 56 with the summary inside the snapshot, measured
+# while each merge mode still had its own merge function (the same at
+# local[4] and local[8]). One merge body must not add a job.
 JOB_SPEC = LogSpec(
     n_events=20_000, n_keys=2_000, n_snapshot=2_000, epoch_size=5_000
 )
-JOBS_WITHOUT_METRICS = 64
+JOBS_COW = 56
+# the same replay through the two tombstone-keeping merges, measured
+# alongside JOBS_COW: merge_mode="mor" (delta appends, no target read)
+# and lww_guard=True (the touched buckets rewritten LWW-resolved)
+JOBS_MOR = 48
+JOBS_LWW_GUARD = 52
 # Spark jobs of an INCREMENTAL run over the same log (a 3-file source
 # dump at a quarter of it: 3 chunks interleaved with 4 epochs), measured
 # while each INCREMENTAL epoch still ran through its own unpipelined
@@ -174,14 +181,22 @@ def _source_dump(spark, log: str, out: str) -> tuple[str, int]:
     return out, s_pos
 
 
-@pytest.mark.parametrize("mode", ["replay", "incremental"])
+@pytest.mark.parametrize(
+    "mode", ["replay", "mor", "lww_guard", "incremental"]
+)
 def test_epoch_summary_launches_no_extra_jobs(spark, tmp_path, mode):
     log = write_log(spark, str(tmp_path / "log"), JOB_SPEC)
     cfg = EngineConfig(
         log_dir=log, table_dir=str(tmp_path / "tbl"), max_events_per_batch=5_000
     )
-    bound, n_epochs = JOBS_WITHOUT_METRICS, 4
-    if mode == "incremental":
+    bound, n_epochs = JOBS_COW, 4
+    if mode == "mor":
+        cfg = dataclasses.replace(cfg, merge_mode="mor")
+        bound = JOBS_MOR
+    elif mode == "lww_guard":
+        cfg = dataclasses.replace(cfg, lww_guard=True)
+        bound = JOBS_LWW_GUARD
+    elif mode == "incremental":
         src, s_pos = _source_dump(spark, log, str(tmp_path / "dump"))
         cfg = dataclasses.replace(
             cfg,

@@ -1,5 +1,8 @@
 """Merge-on-read mode: append-only epochs, read-time LWW resolution,
-compaction folding deltas back into base files."""
+compaction folding deltas back into base files, and copy-on-write
+epochs over the deltas MOR epochs left behind."""
+
+import dataclasses
 
 import pytest
 
@@ -10,6 +13,10 @@ from plugin_debezium_spark.streaming.engine import EngineConfig, run
 from tests.golden import golden_key_hashes, read_log_pandas
 
 SPEC = LogSpec(n_events=3_000, n_keys=400, n_snapshot=300, epoch_size=1_000)
+TRUNC_SPEC = LogSpec(
+    n_events=3_000, n_keys=400, n_snapshot=300, epoch_size=1_000,
+    truncate_every=700,
+)
 
 
 @pytest.fixture(scope="module")
@@ -89,3 +96,40 @@ def test_mor_compaction_folds_deltas(spark, log_dir, tmp_path):
     # (no new events; replay is a no-op but the table stays readable)
     assert run(spark, cfg)["batches_applied"] == 0
     assert _hashes(spark, td) == before
+
+
+@pytest.mark.parametrize("then", ["cow", "lww_guard", "cow_truncate"])
+def test_cow_after_mor_matches_golden(spark, log_dir, tmp_path, then):
+    """MOR epochs, then copy-on-write epochs on the same table: the
+    touched buckets hold base and delta files, so the rewrite must
+    LWW-resolve them (the ordered merge before its anti-join, the
+    lww_guard merge together with the batch) instead of copying
+    duplicates or resurrecting tombstoned keys. In ``cow_truncate`` a
+    TRUNCATE of an ordered epoch kills delta rows too; the MOR epoch
+    before it dropped its own 't' events, so the golden log lacks
+    those."""
+    log = log_dir
+    if then == "cow_truncate":
+        log = write_log(spark, str(tmp_path / "log"), TRUNC_SPEC)
+    cfg = EngineConfig(
+        log_dir=log, table_dir=str(tmp_path / "t"), max_events_per_batch=1_000
+    )
+    n_mor = 1 if then == "cow_truncate" else 2
+    run(
+        spark,
+        dataclasses.replace(
+            cfg, merge_mode="mor", truncate_policy="drop", max_batches=n_mor
+        ),
+    )
+    t = LakeTable(spark, cfg.table_dir)
+    assert {f["kind"] for f in t.current().files} == {"delta"}
+    mor_lsn = int(t.current().properties["last_lsn"])
+
+    out = run(spark, dataclasses.replace(cfg, lww_guard=then == "lww_guard"))
+    assert out["batches_applied"] == 3 - n_mor
+    pdf = read_log_pandas(log)
+    t_lsns = pdf.loc[pdf["op"] == "t", "lsn"]
+    if then == "cow_truncate":
+        assert (t_lsns > mor_lsn).any(), "an ordered epoch must truncate"
+    pdf = pdf[~((pdf["op"] == "t") & (pdf["lsn"] <= mor_lsn))]
+    assert _hashes(spark, cfg.table_dir) == golden_key_hashes(pdf)
