@@ -1,7 +1,8 @@
 """Table maintenance: compaction + tombstone expiry.
 
-COW merging accumulates two file sets per touched bucket per epoch
-(survivors + upserts) and, in lww_guard mode, delete tombstones.
+Merge-on-read epochs append a file set per touched bucket, COW merges
+of large targets leave two (survivors + upserts), and lww_guard mode
+keeps delete tombstones.
 Compaction rewrites chosen buckets into one file each and drops
 tombstones older than the out-of-order horizon — the same job
 Iceberg's rewrite_data_files + expire_snapshots pair does.

@@ -102,6 +102,76 @@ def bucket_expr(key_cols=KEY_COLS, n_buckets: int = 32):
     return F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(n_buckets))
 
 
+_M64 = (1 << 64) - 1
+_P1, _P2, _P3, _P4, _P5 = (
+    0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9,
+    0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5,
+)
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def _lane(data: bytes, i: int, width: int = 8) -> int:
+    return int.from_bytes(data[i:i + width], "little")
+
+
+def _xxhash64(data: bytes, seed: int) -> int:
+    """XXH64 of ``data`` (unsigned), as Spark's XXH64.hashUnsafeBytes
+    computes it: four accumulators over 32-byte stripes, then 8-byte
+    lanes, a 4-byte and 1-byte tail, and the final avalanche."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [seed + _P1 + _P2, seed + _P2, seed, seed - _P1]
+        v = [x & _M64 for x in v]
+        while i <= n - 32:
+            v = [_round(x, _lane(data, i + 8 * j)) for j, x in enumerate(v)]
+            i += 32
+        h = _rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)
+        h &= _M64
+        for x in v:
+            h = ((h ^ _round(0, x)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i <= n - 8:
+        h ^= _round(0, _lane(data, i))
+        h = (_rotl(h, 27) * _P1 + _P4) & _M64
+        i += 8
+    if i <= n - 4:
+        h ^= _lane(data, i, 4) * _P1 & _M64
+        h = (_rotl(h, 23) * _P2 + _P3) & _M64
+        i += 4
+    for b in data[i:]:
+        h ^= b * _P5 & _M64
+        h = _rotl(h, 11) * _P1 & _M64
+    h = (h ^ (h >> 33)) * _P2 & _M64
+    h = (h ^ (h >> 29)) * _P3 & _M64
+    return h ^ (h >> 32)
+
+
+def bucket_of(key_parts, n_buckets: int) -> int:
+    """bucket_expr for one key, on the driver: Spark's xxhash64 (seed
+    42, each string part's UTF-8 bytes hashed with the previous part's
+    hash as seed, a null part skipped), then pmod. Pinned to Spark by
+    tests/test_lake.py's case table."""
+    h = 42
+    for part in key_parts:
+        if part is None:
+            continue
+        if not isinstance(part, str):
+            raise TypeError(
+                f"key parts are strings, got {type(part).__name__}: {part!r}"
+            )
+        h = _xxhash64(part.encode("utf-8"), h)
+    return (h - (1 << 64) if h >> 63 else h) % n_buckets
+
+
 class LakeTable:
     """``fs`` is the metadata I/O boundary (plans/fs.py): snapshot
     manifests, the _current pointer, and the commit lock go through it
@@ -256,11 +326,12 @@ class LakeTable:
         return df
 
     def lookup(self, **key_values) -> DataFrame:
-        """Point read: hash the key to its bucket and scan ONLY that
-        bucket's files — cost is O(table/n_buckets) regardless of table
-        size (the payoff of hash-bucketed layout; at n_buckets=10^4 a
-        100 TB table answers a key probe from ~10 GB of files, and the
-        key equality predicate pushes into those scans). Partial keys
+        """Point read: hash the key to its bucket on the driver
+        (bucket_of, no Spark job) and scan ONLY that bucket's files —
+        cost is O(table/n_buckets) regardless of table size (the payoff
+        of hash-bucketed layout; at n_buckets=10^4 a 100 TB table
+        answers a key probe from ~10 GB of files, and the key equality
+        predicate pushes into those scans). Partial keys
         are rejected: the bucket is a hash of the FULL key."""
         snap = self.current()
         missing = [k for k in snap.key_cols if k not in key_values]
@@ -268,16 +339,10 @@ class LakeTable:
             raise ValueError(
                 f"lookup needs the full key {snap.key_cols}; missing {missing}"
             )
-        one = self.spark.createDataFrame(
-            [tuple(key_values[k] for k in snap.key_cols)],
-            T.StructType(
-                [T.StructField(k, T.StringType()) for k in snap.key_cols]
-            ),
+        bucket = bucket_of(
+            [key_values[k] for k in snap.key_cols], snap.n_buckets
         )
-        bucket = one.select(
-            bucket_expr(tuple(snap.key_cols), snap.n_buckets).alias("b")
-        ).collect()[0]["b"]
-        df = self.read(buckets=[int(bucket)])
+        df = self.read(buckets=[bucket])
         for k in snap.key_cols:
             df = df.filter(F.col(k) == F.lit(key_values[k]))
         return df

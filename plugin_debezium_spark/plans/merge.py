@@ -14,16 +14,20 @@ Physical strategy (what makes it scale):
 2. only touched buckets of the target are read (manifest-level file
    pruning — at 100 TB a micro-batch reads a sliver of the table).
 3. survivors = target ⟕anti broadcast(batch keys): when the deduped
-   key set is broadcastable (≤ BROADCAST_KEY_LIMIT rows), the target
-   data NEVER shuffles — the anti-join runs map-side over the bucket
-   files and survivors are written back partition-aligned. Upserts
-   (batch rows) take the only shuffle: one bucket-repartition.
-   Oversized batches fall back to a shuffle anti-join (AQE handles
-   skew).
-4. survivor files + upsert files commit together in one atomic
-   snapshot with the epoch id + offsets (exactly-once: replaying an
-   applied epoch is a metadata no-op — the observable the reference
-   tests as "re-run returns 0 records", mysql/CaptureTest.java:97-99).
+   key set is broadcastable (≤ BROADCAST_KEY_LIMIT rows), the anti-join
+   runs map-side over the bucket files; oversized batches fall back to
+   a shuffle anti-join (AQE handles skew).
+4. a small touched target (≤ WRITE_ROWS_PER_TASK rows per touched
+   bucket by manifest count, _fold_survivors) joins the upserts in one
+   bucket-aligned shuffle and write, so each rewritten bucket commits
+   one file set. Above the switch the target data NEVER shuffles:
+   survivors are written back partition-aligned and the upserts (batch
+   rows) take the only shuffle, one bucket-repartition — two file sets
+   per bucket, but no full-table shuffle on a large table.
+5. the written files commit together in one atomic snapshot with the
+   epoch id + offsets (exactly-once: replaying an applied epoch is a
+   metadata no-op — the observable the reference tests as "re-run
+   returns 0 records", mysql/CaptureTest.java:97-99).
 """
 
 from __future__ import annotations
@@ -44,11 +48,21 @@ BROADCAST_KEY_LIMIT = 2_000_000
 WRITE_ROWS_PER_TASK = 32_768
 
 
+def _fold_survivors(target_rows: int, n_touched: int) -> bool:
+    """Whether the ordered merge writes its survivors in the upserts'
+    bucket-aligned write (one file set per bucket) instead of a
+    separate no-shuffle write: only while the touched target holds at
+    most WRITE_ROWS_PER_TASK rows per touched bucket, so the extra
+    shuffle stays within one write task's worth of rows per bucket."""
+    return target_rows <= WRITE_ROWS_PER_TASK * max(n_touched, 1)
+
+
 def _bucket_partitioned(
     df: DataFrame,
     touched: list[int],
     key_cols: list[str],
     n_rows: int | None = None,
+    min_tasks: int = 1,
 ) -> DataFrame:
     """Bucket-aligned repartition with slot-proportional fan-out: k
     salted sub-partitions per touched bucket so the write stage keeps
@@ -66,13 +80,18 @@ def _bucket_partitioned(
     few tasks while a bench-scale epoch (≥ WRITE_ROWS_PER_TASK×touched
     rows) keeps the full bucket-aligned width. Dynamic-partition
     writes split each task by bucket dir, so the FILE layout stays one
-    file per (task, bucket) either way."""
+    file per (task, bucket) either way.
+
+    min_tasks: a floor under that cap (the ordered merge's one-write
+    path passes the core count, so a small write still uses every
+    core)."""
     n = max(len(touched), 1)
     par = df.sparkSession.sparkContext.defaultParallelism
     k = max(1, -(-2 * par // n))
     width = n * k
     if n_rows is not None:
-        width = min(width, max(1, -(-int(n_rows) // WRITE_ROWS_PER_TASK)))
+        cap = max(min_tasks, -(-int(n_rows) // WRITE_ROWS_PER_TASK))
+        width = min(width, cap)
     if width < n:
         # fewer tasks than buckets: plain hash-by-bucket keeps each
         # bucket whole inside one task (one file per bucket)
@@ -252,7 +271,9 @@ def merge_prepared(
 
     lww_guard=False (default): epochs are applied in LSN order (the
     batch engine's contract), so batch rows unconditionally win — the
-    fast path (no-shuffle survivors + one batch shuffle).
+    fast path: a small touched target's survivors join the upserts in
+    one bucket-aligned write; a large one's are written back without a
+    shuffle beside the one batch shuffle (_fold_survivors).
 
     lww_guard=True: batches may arrive out of LSN order (the streaming
     file source delivers files in listing order). The touched buckets
@@ -296,7 +317,7 @@ def merge_prepared(
         target = _cast_to(
             table._read_files(prev, target_files, None), new_schema
         )
-    n_rows, survivors = n_batch_keys, None
+    n_rows, min_tasks, survivors = n_batch_keys, 1, None
     if tombstones:
         rows = _cast_to(
             batch.withColumn("_deleted", F.col("op") == OP_DELETE), new_schema
@@ -337,6 +358,16 @@ def merge_prepared(
                 # the broadcast key set, written back partition-aligned
                 keys = F.broadcast(keys)
             survivors = target.join(keys, on=key_cols, how="left_anti")
+            target_rows = sum(int(f["rows"]) for f in target_files)
+            if _fold_survivors(target_rows, len(touched)):
+                # one file set per bucket: the survivors ride the
+                # upserts' bucket-aligned write, given at least one
+                # task per core (at the batch-only width, one task at
+                # the benchmark's size, events_per_s read 2-3% lower on
+                # 4 cores)
+                rows, survivors = rows.unionByName(survivors), None
+                n_rows += target_rows
+                min_tasks = batch.sparkSession.sparkContext.defaultParallelism
 
     # the written rows → bucket layout (the ordered merge's only
     # full-row shuffle). Write tasks fan out beyond one-per-bucket when
@@ -345,14 +376,20 @@ def merge_prepared(
     # n_buckets reduce tasks, wave imbalance serializes the write at
     # high core counts (measured: 64 tasks beat 32 by 1.5x at 16 cores).
     writes = [
-        (_bucket_partitioned(bucketed(rows), touched, key_cols, n_rows), tag)
+        (
+            _bucket_partitioned(
+                bucketed(rows), touched, key_cols, n_rows, min_tasks
+            ),
+            tag,
+        )
     ]
     if survivors is not None:
         writes.append((bucketed(survivors), "keep"))
 
-    # the ordered merge's two write jobs are independent — submit them
-    # concurrently so neither's stage gaps idle the cluster (same trick
-    # a streaming runtime uses for sibling sinks)
+    # above the survivors switch the ordered merge's two write jobs are
+    # independent — submit them concurrently so neither's stage gaps
+    # idle the cluster (same trick a streaming runtime uses for sibling
+    # sinks)
     from concurrent.futures import ThreadPoolExecutor
 
     def _write(w):

@@ -603,9 +603,10 @@ def _apply_epoch_variant(
        (schema_of_variant_agg), the touched-bucket set, the key count
        and the epoch summary's counts together,
     3. decode winners via a variant→struct cast, sha256 winners only,
-    4. merge_prepared writes survivors (no shuffle, broadcast
-       anti-join) + upserts (one bucket shuffle), commits them with
-       the offsets and the summary atomically.
+    4. merge_prepared writes upserts + survivors (broadcast anti-join)
+       in one bucket shuffle, or beside it without a shuffle on a large
+       target, and commits them with the offsets and the summary
+       atomically.
 
     events: the epoch's filtered envelopes, or None when ``prepared``
     (prepare_latest's output, which this call releases) is given.

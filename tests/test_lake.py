@@ -3,6 +3,7 @@ reads, idempotent epochs (reference analogues: AtomicStateTest.java:
 72-255 state atomicity; CaptureTest.java:97-99 re-run==0)."""
 
 import os
+import random
 
 import pandas as pd
 import pytest
@@ -11,8 +12,9 @@ from pyspark.sql import types as T
 
 from plugin_debezium_spark.models import KEY_COLS
 from plugin_debezium_spark.plans.evolve import evolve_schema
-from plugin_debezium_spark.plans.lake import LakeTable, bucket_expr
+from plugin_debezium_spark.plans.lake import LakeTable, bucket_expr, bucket_of
 from plugin_debezium_spark.plans.merge import merge_batch
+from tests.test_epoch_summary import _last_job_id
 
 SCHEMA = T.StructType(
     [
@@ -260,6 +262,51 @@ def test_lookup_point_read(spark, tmp_path):
     assert t.lookup(repo="nope", path="x", commit="y").count() == 0
     with pytest.raises(ValueError, match="missing"):
         t.lookup(repo="r7")
+
+
+def test_lookup_launches_one_job(spark, tmp_path):
+    """The key hashes to its bucket on the driver: a point read costs
+    the one scan job; a non-string key part is refused."""
+    t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, n_buckets=8)
+    rows = [(f"r{i}", f"p{i}", f"c{i}", f"v{i}", "c") for i in range(20)]
+    merge_batch(t, _batch(spark, rows), epoch_id=0, last_lsn=1)
+    sc = spark.sparkContext
+    first = _last_job_id(sc, "lookup-before")
+    got = t.lookup(repo="r3", path="p3", commit="c3").collect()
+    last = _last_job_id(sc, "lookup-after")
+    assert [r["content"] for r in got] == ["v3"]
+    assert last - first - 1 == 1
+    with pytest.raises(TypeError):
+        t.lookup(repo=3, path="p3", commit="c3")
+
+
+def test_driver_bucket_matches_spark(spark):
+    """bucket_of mirrors bucket_expr (Spark's seeded, chained xxhash64)
+    on a case table reaching every tail branch of the hash: null, empty,
+    non-ASCII and emoji parts of 0-100 characters (up to 400 bytes)."""
+    rng = random.Random(42)
+    chars = ["a", "Z", "7", "/", " ", "é", "ß", "中", "😀"]
+
+    def part():
+        if rng.random() < 0.08:
+            return None
+        return "".join(rng.choice(chars) for _ in range(rng.randint(0, 100)))
+
+    keys = [(part(), part(), part()) for _ in range(3_000)]
+    keys += [(None, None, None), ("", "", ""), ("a" * 32, None, "é")]
+    keys += [("x" * n, "😀" * (n % 9), "") for n in range(101)]
+    ns = (32, 7, 1024)
+    got = (
+        spark.createDataFrame(keys, "repo string, path string, commit string")
+        .select(
+            *KEY_COLS, *[bucket_expr(KEY_COLS, n).alias(f"b{n}") for n in ns]
+        )
+        .collect()
+    )
+    assert len(got) == len(keys)
+    for r in got:
+        for n in ns:
+            assert bucket_of([r[c] for c in KEY_COLS], n) == r[f"b{n}"], (r, n)
 
 
 def test_expire_snapshots_reclaims_unreferenced_files(spark, tmp_path):

@@ -1,13 +1,16 @@
 """Merge-on-read mode: append-only epochs, read-time LWW resolution,
 compaction folding deltas back into base files, and copy-on-write
-epochs over the deltas MOR epochs left behind."""
+epochs over the deltas MOR epochs left behind — each rewritten bucket
+left as one file set."""
 
 import dataclasses
+from collections import Counter
 
 import pytest
 
 from plugin_debezium_spark.plans.compact import compact
 from plugin_debezium_spark.plans.lake import LakeTable
+from plugin_debezium_spark.plans.merge import WRITE_ROWS_PER_TASK, _fold_survivors
 from plugin_debezium_spark.sources.genlog import LogSpec, write_log
 from plugin_debezium_spark.streaming.engine import EngineConfig, run
 from tests.golden import golden_key_hashes, read_log_pandas
@@ -133,3 +136,61 @@ def test_cow_after_mor_matches_golden(spark, log_dir, tmp_path, then):
         assert (t_lsns > mor_lsn).any(), "an ordered epoch must truncate"
     pdf = pdf[~((pdf["op"] == "t") & (pdf["lsn"] <= mor_lsn))]
     assert _hashes(spark, cfg.table_dir) == golden_key_hashes(pdf)
+
+
+@pytest.mark.parametrize("case", ["replay", "truncate", "mor_then_cow"])
+def test_ordered_cow_leaves_one_file_set_per_bucket(
+    spark, log_dir, tmp_path, case
+):
+    """Below the survivors switch every ordered COW epoch rewrites each
+    touched bucket into at most k files, k being _bucket_partitioned's
+    salt fan-out, so compaction finds nothing to fold; the state still
+    equals the golden applier."""
+    log = log_dir
+    if case == "truncate":
+        # one TRUNCATE, in the last epoch: the epochs before it still
+        # carry survivors
+        spec = dataclasses.replace(SPEC, truncate_every=2_500)
+        log = write_log(spark, str(tmp_path / "log"), spec)
+    cfg = EngineConfig(
+        log_dir=log, table_dir=str(tmp_path / "t"), max_events_per_batch=1_000
+    )
+    if case == "mor_then_cow":
+        run(spark, dataclasses.replace(cfg, merge_mode="mor", max_batches=1))
+    run(spark, cfg)
+    t = LakeTable(spark, cfg.table_dir)
+    par = spark.sparkContext.defaultParallelism
+    cow_epochs = truncated = 0
+    for sid in t.snapshots():
+        snap = t.snapshot(sid)
+        new = [f for f in snap.files if f["path"].startswith(f"data/snap-{sid}-")]
+        if snap.summary.get("operation") != "epoch" or new[0]["kind"] == "delta":
+            continue
+        cow_epochs += 1
+        truncated += "t" in snap.summary["ops"]
+        touched = {f["bucket"] for f in new}
+        k = max(1, -(-2 * par // len(touched)))
+        per_bucket = Counter(f["bucket"] for f in snap.files)
+        assert max(per_bucket[b] for b in touched) <= k, (sid, per_bucket)
+    assert cow_epochs == (2 if case == "mor_then_cow" else 3)
+    assert compact(t, min_files_per_bucket=2)["compacted_buckets"] == 0
+    assert bool(truncated) == (case == "truncate")
+    pdf = read_log_pandas(log)
+    assert _hashes(spark, cfg.table_dir) == golden_key_hashes(pdf)
+
+
+def test_survivors_switch_boundary():
+    """The ordered merge folds its survivors into the upserts' write
+    only while the touched target holds at most WRITE_ROWS_PER_TASK
+    rows per touched bucket (manifest counts)."""
+    assert _fold_survivors(0, 0)
+    assert _fold_survivors(WRITE_ROWS_PER_TASK * 32, 32)
+    assert not _fold_survivors(WRITE_ROWS_PER_TASK * 32 + 1, 32)
+    assert _fold_survivors(WRITE_ROWS_PER_TASK, 1)
+    assert not _fold_survivors(WRITE_ROWS_PER_TASK + 1, 1)
+    # the benchmark's epoch-2 target: ~10k rows over 32 buckets
+    assert _fold_survivors(10_000, 32)
+    # bench.py's 16M replay: 1.6M keys over 32 buckets (~45-50k live
+    # rows per bucket at epoch 2) keeps the two writes
+    assert not _fold_survivors(45_000 * 32, 32)
+    assert not _fold_survivors(1_600_000, 32)

@@ -62,32 +62,75 @@ def test_filters_and_shaping_stay_in_codegen(spark, log_dir):
     assert not plan.startswith("Found 0")
 
 
-def test_merge_uses_broadcast_anti_join(spark, log_dir, tmp_path):
-    """The survivors anti-join must be a broadcast join (target data
-    must not shuffle)."""
-    captured = {}
-    import plugin_debezium_spark.plans.lake as lake_mod
+def _plan_nodes(df) -> list[str]:
+    """One line per node of df's physical plan (AQE's initial plan),
+    not descending into cached relations: the cached batch's own
+    shuffles ran when it was materialized."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    out, todo = [], [plan]
+    while todo:
+        node = todo.pop()
+        out.append(node.simpleString(25))
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return out
 
+
+def _merge_write_plans(spark, log_dir, table_dir) -> dict:
+    """The physical plan of each merge write of a replay, by write tag
+    (the last epoch's)."""
+    import plugin_debezium_spark.plans.lake as lake_mod
+    from plugin_debezium_spark.streaming.engine import EngineConfig, run
+
+    captured = {}
     orig = lake_mod.LakeTable.write_bucket_data
 
-    def spy(self, df, snapshot_id, tag="d"):
-        if tag == "keep":
-            captured["plan"] = _explain(df, mode="simple")
-        return orig(self, df, snapshot_id, tag)
-
-    from plugin_debezium_spark.streaming.engine import EngineConfig, run
+    def spy(self, df, snapshot_id, tag="d", **kw):
+        captured[tag] = _plan_nodes(df)
+        return orig(self, df, snapshot_id, tag, **kw)
 
     lake_mod.LakeTable.write_bucket_data = spy
     try:
-        run(
-            spark,
-            EngineConfig(
-                log_dir=log_dir,
-                table_dir=str(tmp_path / "t"),
-                max_events_per_batch=1000,
-            ),
+        cfg = EngineConfig(
+            log_dir=log_dir, table_dir=table_dir, max_events_per_batch=1000
         )
+        assert run(spark, cfg)["batches_applied"] >= 2
     finally:
         lake_mod.LakeTable.write_bucket_data = orig
-    assert "BroadcastHashJoin" in captured["plan"].replace("Exec", "")
-    assert "LeftAnti" in captured["plan"]
+    return captured
+
+
+def _broadcast_anti_join(nodes: list[str]) -> bool:
+    return any(
+        n.startswith("BroadcastHashJoin") and "LeftAnti" in n for n in nodes
+    )
+
+
+def test_merge_large_target_keeps_survivors_unshuffled(
+    spark, log_dir, tmp_path, monkeypatch
+):
+    """Above the survivors switch the anti-join must be a broadcast
+    join and the survivors write must not shuffle the target data."""
+    import plugin_debezium_spark.plans.merge as merge_mod
+
+    monkeypatch.setattr(merge_mod, "_fold_survivors", lambda *a: False)
+    plans = _merge_write_plans(spark, log_dir, str(tmp_path / "t"))
+    keep = plans["keep"]
+    assert _broadcast_anti_join(keep)
+    exchanges = [n for n in keep if "Exchange" in n]
+    assert exchanges and all(n.startswith("BroadcastExchange") for n in exchanges)
+
+
+def test_merge_small_target_writes_survivors_with_upserts(
+    spark, log_dir, tmp_path
+):
+    """Below the switch the survivors (still a broadcast anti-join)
+    join the upserts: one write, one bucket shuffle."""
+    plans = _merge_write_plans(spark, log_dir, str(tmp_path / "t"))
+    assert "keep" not in plans
+    ups = plans["ups"]
+    assert _broadcast_anti_join(ups)
+    shuffles = [n for n in ups if n.startswith("Exchange")]
+    assert len(shuffles) == 1 and "hashpartitioning(_bucket" in shuffles[0]
