@@ -1,8 +1,8 @@
 """Table maintenance: compaction + tombstone expiry.
 
-Merge-on-read epochs append a file set per touched bucket, COW merges
-of large targets leave two (survivors + upserts), and lww_guard mode
-keeps delete tombstones.
+Merge-on-read epochs append a file set per touched bucket, ordered COW
+merges above the survivors switch (merge._fold_survivors) leave two
+(survivors + upserts), and lww_guard mode keeps delete tombstones.
 Compaction rewrites chosen buckets into one file each and drops
 tombstones older than the out-of-order horizon — the same job
 Iceberg's rewrite_data_files + expire_snapshots pair does.

@@ -604,8 +604,8 @@ def _apply_epoch_variant(
        and the epoch summary's counts together,
     3. decode winners via a variant→struct cast, sha256 winners only,
     4. merge_prepared writes upserts + survivors (broadcast anti-join)
-       in one bucket shuffle, or beside it without a shuffle on a large
-       target, and commits them with the offsets and the summary
+       in one bucket shuffle, or beside it without a shuffle above the
+       survivors switch (merge._fold_survivors), and commits them with the offsets and the summary
        atomically.
 
     events: the epoch's filtered envelopes, or None when ``prepared``

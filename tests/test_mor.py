@@ -10,7 +10,12 @@ import pytest
 
 from plugin_debezium_spark.plans.compact import compact
 from plugin_debezium_spark.plans.lake import LakeTable
-from plugin_debezium_spark.plans.merge import WRITE_ROWS_PER_TASK, _fold_survivors
+from plugin_debezium_spark.plans.merge import (
+    FOLD_MIN_TOUCHED,
+    FOLD_ROWS_PER_BUCKET,
+    WRITE_ROWS_PER_TASK,
+    _fold_survivors,
+)
 from plugin_debezium_spark.sources.genlog import LogSpec, write_log
 from plugin_debezium_spark.streaming.engine import EngineConfig, run
 from tests.golden import golden_key_hashes, read_log_pandas
@@ -101,6 +106,24 @@ def test_mor_compaction_folds_deltas(spark, log_dir, tmp_path):
     assert _hashes(spark, td) == before
 
 
+def _two_writes(monkeypatch) -> list[str]:
+    """Force the ordered merge's above-the-switch path (a separate
+    survivors write): every test table is far below the switch.
+    Returns the tags of the lake writes that follow."""
+    import plugin_debezium_spark.plans.merge as merge_mod
+
+    monkeypatch.setattr(merge_mod, "_fold_survivors", lambda *a: False)
+    tags = []
+    orig = LakeTable.write_bucket_data
+
+    def spy(self, df, snapshot_id, tag="d", **kw):
+        tags.append(tag)
+        return orig(self, df, snapshot_id, tag, **kw)
+
+    monkeypatch.setattr(LakeTable, "write_bucket_data", spy)
+    return tags
+
+
 @pytest.mark.parametrize("then", ["cow", "lww_guard", "cow_truncate"])
 def test_cow_after_mor_matches_golden(spark, log_dir, tmp_path, then):
     """MOR epochs, then copy-on-write epochs on the same table: the
@@ -111,6 +134,23 @@ def test_cow_after_mor_matches_golden(spark, log_dir, tmp_path, then):
     TRUNCATE of an ordered epoch kills delta rows too; the MOR epoch
     before it dropped its own 't' events, so the golden log lacks
     those."""
+    _cow_after_mor(spark, log_dir, tmp_path, then)
+
+
+@pytest.mark.parametrize("then", ["cow", "cow_truncate"])
+def test_cow_after_mor_two_writes_matches_golden(
+    spark, log_dir, tmp_path, monkeypatch, then
+):
+    """The same mixed-mode cases through the separate survivors write
+    (delta-bucket LWW resolution and the truncate filter on the path
+    large targets take)."""
+    tags = _two_writes(monkeypatch)
+    _cow_after_mor(spark, log_dir, tmp_path, then)
+    # one per COW epoch
+    assert tags.count("keep") == {"cow": 1, "cow_truncate": 2}[then]
+
+
+def _cow_after_mor(spark, log_dir, tmp_path, then):
     log = log_dir
     if then == "cow_truncate":
         log = write_log(spark, str(tmp_path / "log"), TRUNC_SPEC)
@@ -138,14 +178,12 @@ def test_cow_after_mor_matches_golden(spark, log_dir, tmp_path, then):
     assert _hashes(spark, cfg.table_dir) == golden_key_hashes(pdf)
 
 
-@pytest.mark.parametrize("case", ["replay", "truncate", "mor_then_cow"])
-def test_ordered_cow_leaves_one_file_set_per_bucket(
-    spark, log_dir, tmp_path, case
-):
-    """Below the survivors switch every ordered COW epoch rewrites each
-    touched bucket into at most k files, k being _bucket_partitioned's
-    salt fan-out, so compaction finds nothing to fold; the state still
-    equals the golden applier."""
+ORDERED_CASES = ["replay", "truncate", "mor_then_cow"]
+
+
+def _ordered_cow_run(spark, log_dir, tmp_path, case) -> tuple[str, str]:
+    """An ordered COW replay (after one mor epoch in ``mor_then_cow``);
+    returns (log, table_dir)."""
     log = log_dir
     if case == "truncate":
         # one TRUNCATE, in the last epoch: the epochs before it still
@@ -158,7 +196,19 @@ def test_ordered_cow_leaves_one_file_set_per_bucket(
     if case == "mor_then_cow":
         run(spark, dataclasses.replace(cfg, merge_mode="mor", max_batches=1))
     run(spark, cfg)
-    t = LakeTable(spark, cfg.table_dir)
+    return log, cfg.table_dir
+
+
+@pytest.mark.parametrize("case", ORDERED_CASES)
+def test_ordered_cow_leaves_one_file_set_per_bucket(
+    spark, log_dir, tmp_path, case
+):
+    """Below the survivors switch every ordered COW epoch rewrites each
+    touched bucket into at most k files, k being _bucket_partitioned's
+    salt fan-out, so compaction finds nothing to fold; the state still
+    equals the golden applier."""
+    log, table_dir = _ordered_cow_run(spark, log_dir, tmp_path, case)
+    t = LakeTable(spark, table_dir)
     par = spark.sparkContext.defaultParallelism
     cow_epochs = truncated = 0
     for sid in t.snapshots():
@@ -176,21 +226,41 @@ def test_ordered_cow_leaves_one_file_set_per_bucket(
     assert compact(t, min_files_per_bucket=2)["compacted_buckets"] == 0
     assert bool(truncated) == (case == "truncate")
     pdf = read_log_pandas(log)
-    assert _hashes(spark, cfg.table_dir) == golden_key_hashes(pdf)
+    assert _hashes(spark, table_dir) == golden_key_hashes(pdf)
+
+
+@pytest.mark.parametrize("case", ORDERED_CASES)
+def test_ordered_cow_two_writes_matches_golden(
+    spark, log_dir, tmp_path, monkeypatch, case
+):
+    """The same replays through the separate survivors write: the state
+    equals the golden applier."""
+    tags = _two_writes(monkeypatch)
+    log, table_dir = _ordered_cow_run(spark, log_dir, tmp_path, case)
+    assert tags.count("keep") == 2  # every epoch with a target
+    pdf = read_log_pandas(log)
+    assert _hashes(spark, table_dir) == golden_key_hashes(pdf)
 
 
 def test_survivors_switch_boundary():
     """The ordered merge folds its survivors into the upserts' write
-    only while the touched target holds at most WRITE_ROWS_PER_TASK
-    rows per touched bucket (manifest counts)."""
-    assert _fold_survivors(0, 0)
-    assert _fold_survivors(WRITE_ROWS_PER_TASK * 32, 32)
-    assert not _fold_survivors(WRITE_ROWS_PER_TASK * 32 + 1, 32)
-    assert _fold_survivors(WRITE_ROWS_PER_TASK, 1)
-    assert not _fold_survivors(WRITE_ROWS_PER_TASK + 1, 1)
+    only while at least FOLD_MIN_TOUCHED buckets are rewritten and
+    their files hold at most FOLD_ROWS_PER_BUCKET rows per bucket
+    (manifest counts)."""
+    assert _fold_survivors(0, 32)
+    assert _fold_survivors(FOLD_ROWS_PER_BUCKET * 32, 32)
+    assert not _fold_survivors(FOLD_ROWS_PER_BUCKET * 32 + 1, 32)
+    n = FOLD_MIN_TOUCHED
+    assert _fold_survivors(FOLD_ROWS_PER_BUCKET * n, n)
+    assert not _fold_survivors(FOLD_ROWS_PER_BUCKET * n + 1, n)
+    # fewer touched buckets: two writes, however small the target
+    assert not _fold_survivors(0, FOLD_MIN_TOUCHED - 1)
+    assert not _fold_survivors(100, 4)
     # the benchmark's epoch-2 target: ~10k rows over 32 buckets
     assert _fold_survivors(10_000, 32)
     # bench.py's 16M replay: 1.6M keys over 32 buckets (~45-50k live
-    # rows per bucket at epoch 2) keeps the two writes
+    # rows per bucket at epoch 2) keeps the two writes, as does any
+    # target of more than WRITE_ROWS_PER_TASK rows per touched bucket
     assert not _fold_survivors(45_000 * 32, 32)
     assert not _fold_survivors(1_600_000, 32)
+    assert not _fold_survivors(WRITE_ROWS_PER_TASK * 32 + 1, 32)
