@@ -1,2 +1,2 @@
-"""Scalar function surface: envelope decode (vectorized Arrow + native),
-content hashing, text analysis (SURVEY.md §2.3 P7, §2.8)."""
+"""Scalar function surface: Connect wire decode, content hashing,
+temporal conversions, text analysis (SURVEY.md §2.3 P7, §2.8)."""

@@ -9,8 +9,8 @@ plugin/debezium/models/Envelope.java:19-57, models/Message.java:40-67)
 
 The reference carries schema per-record (Kafka Connect); we carry the
 payload as a JSON string (the exact shape MongoDB envelopes arrive in,
-reference CustomParameterDeserializer.java:14-20) and decode it with a
-vectorized Arrow UDF or native from_json — that keeps the log schema
+reference CustomParameterDeserializer.java:14-20) and parse it to a
+Variant cast to the inferred payload type — that keeps the log schema
 fixed while the *payload* schema can evolve mid-log.
 """
 

@@ -1,19 +1,116 @@
-"""Schema evolution step (SURVEY.md §4, §7 step 5).
+"""The payload type lattice and the schema evolution step (SURVEY.md
+§4, §7 step 5).
 
-Per micro-batch, before the MERGE: diff the batch's decoded payload
-schema against the table schema and produce the evolved sink schema —
-added columns append (nullable), numeric types widen along the lattice
-in functions/decode.merge_types, enum growth (new lang values) is a
-data-level no-op. The reference gets this implicitly from per-record
-Connect schemas + a schema-history file (AbstractDebeziumTask.java:
-535-538, migration :465-518); we make it an explicit, auditable diff.
+One type path serves every ingest and delivery path: an epoch's
+payload type is ``schema_of_variant_agg`` over its images
+(:func:`variant_type` parses the DDL), per-group results and
+cross-epoch table types fold with :func:`merge_types`, and
+:func:`table_type` normalizes a type before it meets a table or a
+cast target (no VOID or VARIANT leaf reaches a parquet file). Because
+the fold mirrors Spark's own aggregate exactly, the table schema does
+not depend on where epochs close.
+
+Per micro-batch, before the MERGE, :func:`evolve_schema` diffs the
+batch's payload schema against the table schema: added columns append
+(nullable), types widen along :func:`merge_types`, enum growth (new
+lang values) is a data-level no-op. The reference gets this implicitly
+from per-record Connect schemas + a schema-history file
+(AbstractDebeziumTask.java:535-538, migration :465-518); we make it an
+explicit, auditable diff.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import types as T
 
-from plugin_debezium_spark.functions.decode import merge_types
+# Spark's DecimalType.forType digits per integral type
+_INTEGRAL_DIGITS = {
+    T.ByteType: 3,
+    T.ShortType: 5,
+    T.IntegerType: 10,
+    T.LongType: 20,
+}
+_NUMERIC = (*_INTEGRAL_DIGITS, T.DecimalType, T.FloatType, T.DoubleType)
+
+
+def variant_type(ddl: str | None) -> T.DataType:
+    """schema_of_variant(_agg) DDL → DataType ('OBJECT<...>' → struct;
+    VOID → NullType, VARIANT → VariantType)."""
+    if not ddl:
+        return T.NullType()
+    return T._parse_datatype_string(ddl.replace("OBJECT<", "STRUCT<"))
+
+
+def merge_types(a: T.DataType, b: T.DataType) -> T.DataType:
+    """Least upper bound of two payload types: the merge
+    schema_of_variant_agg applies across rows, mirrored on the driver,
+    so folding per-group results with it gives exactly the type one
+    global aggregate would (tests/test_epoch_summary.py pins it against
+    Spark). Integers are BIGINT, which widens into decimals as
+    DECIMAL(20,0); a decimal wider than 38 digits, or any decimal
+    meeting a DOUBLE, becomes DOUBLE; object fields union in name
+    order; anything else incompatible becomes VARIANT (STRING once
+    :func:`table_type` normalizes it). Spark-native columns (merge_batch
+    callers) widen the same way: an integral type to the wider one or
+    to its DECIMAL digits, and FLOAT to DOUBLE."""
+    if a == b or isinstance(b, T.NullType):
+        return a
+    if isinstance(a, T.NullType):
+        return b
+    if isinstance(a, _NUMERIC) and isinstance(b, _NUMERIC):
+        if {type(a), type(b)} & {T.FloatType, T.DoubleType}:
+            return T.DoubleType()
+        da, db = (_INTEGRAL_DIGITS.get(type(x)) for x in (a, b))
+        if da and db:
+            return a if da >= db else b
+        da, db = (
+            x if d is None else T.DecimalType(d, 0)
+            for x, d in ((a, da), (b, db))
+        )
+        scale = max(da.scale, db.scale)
+        digits = max(da.precision - da.scale, db.precision - db.scale) + scale
+        return T.DecimalType(digits, scale) if digits <= 38 else T.DoubleType()
+    if isinstance(a, T.StructType) and isinstance(b, T.StructType):
+        fa = {f.name: f.dataType for f in a.fields}
+        fb = {f.name: f.dataType for f in b.fields}
+        return T.StructType(
+            [
+                T.StructField(
+                    n,
+                    merge_types(fa.get(n, T.NullType()), fb.get(n, T.NullType())),
+                    True,
+                )
+                for n in sorted(fa.keys() | fb.keys())
+            ]
+        )
+    if isinstance(a, T.ArrayType) and isinstance(b, T.ArrayType):
+        return T.ArrayType(merge_types(a.elementType, b.elementType), True)
+    return T.VariantType()
+
+
+def table_type(dt: T.DataType) -> T.DataType:
+    """The storable form of an inferred type: VARIANT leaves become
+    STRING (a variant casts to its JSON text), struct fields that are
+    VOID (null in every row) are dropped, and so is a struct left with
+    no field; an array of VOID holds strings. Returns NullType when
+    nothing storable is left, so a later epoch's typed value adds the
+    column as if the all-null epoch had been folded in with it."""
+    if isinstance(dt, T.VariantType):
+        return T.StringType()
+    if isinstance(dt, T.StructType):
+        kept = [(f.name, table_type(f.dataType)) for f in dt.fields]
+        fields = [
+            T.StructField(n, t, True)
+            for n, t in kept
+            if not isinstance(t, T.NullType)
+        ]
+        return T.StructType(fields) if fields else T.NullType()
+    if isinstance(dt, T.ArrayType):
+        elem = table_type(dt.elementType)
+        if isinstance(elem, T.NullType):
+            elem = T.StringType()
+        return T.ArrayType(elem, True)
+    return dt
 
 
 def evolve_schema(
@@ -23,26 +120,29 @@ def evolve_schema(
 
     Column order: existing table columns first (stable positions, like
     Iceberg field-id semantics), new columns appended in batch order.
+    Every type goes through :func:`table_type`: a batch column that is
+    VOID adds nothing.
     """
     changes: list[str] = []
     batch = {f.name: f.dataType for f in batch_schema.fields}
     out: list[T.StructField] = []
     for f in table_schema.fields:
-        if f.name in batch and batch[f.name] != f.dataType:
-            widened = merge_types(f.dataType, batch[f.name])
-            if widened != f.dataType:
+        t = f.dataType
+        if f.name in batch and batch[f.name] != t:
+            widened = table_type(merge_types(t, batch[f.name]))
+            if widened != t:
                 changes.append(
-                    f"widen {f.name}: {f.dataType.simpleString()} -> "
+                    f"widen {f.name}: {t.simpleString()} -> "
                     f"{widened.simpleString()}"
                 )
-            out.append(T.StructField(f.name, widened, True))
-        else:
-            out.append(T.StructField(f.name, f.dataType, True))
+                t = widened
+        out.append(T.StructField(f.name, t, True))
     known = {f.name for f in table_schema.fields}
     for f in batch_schema.fields:
-        if f.name not in known:
-            changes.append(f"add column {f.name}: {f.dataType.simpleString()}")
-            out.append(T.StructField(f.name, f.dataType, True))
+        t = table_type(f.dataType)
+        if f.name not in known and not isinstance(t, T.NullType):
+            changes.append(f"add column {f.name}: {t.simpleString()}")
+            out.append(T.StructField(f.name, t, True))
     return T.StructType(out), changes
 
 

@@ -16,6 +16,12 @@ loop and the Structured Streaming foreachBatch of the realtime-trigger
 path (streaming/realtime.py, SURVEY.md §3.3); one prefetching loop
 (_drain) runs the batch epochs, the tail-follow polls and the
 INCREMENTAL bootstrap's interleaved epochs.
+
+Payload types have one path: the epoch's stats action infers them
+with schema_of_variant_agg, and plans/evolve.py's lattice folds the
+per-group results and widens the table with the same merge, so the
+table schema does not depend on where epochs close. decode_images is
+that inference for the delivery paths (stream_rows, export).
 """
 
 from __future__ import annotations
@@ -32,6 +38,12 @@ from plugin_debezium_spark.models import KEY_COLS, OP_TRUNCATE, base_schema
 from plugin_debezium_spark.operators.dedupe import latest_by_key
 from plugin_debezium_spark.operators.filters import drop_ddl, include_exclude
 from plugin_debezium_spark.operators.routing import stream_name
+from plugin_debezium_spark.plans.evolve import (
+    evolve_schema,
+    # the fold's names here: tests/test_epoch_summary.py pins them to Spark
+    merge_types as _merge_variant_types,
+    variant_type as _variant_type,
+)
 from plugin_debezium_spark.plans.lake import LakeTable
 from plugin_debezium_spark.sources.log_reader import (
     align_epochs_to_transactions,
@@ -249,67 +261,39 @@ def _payload_base(table: LakeTable) -> T.StructType:
     )
 
 
-def _variant_type(ddl: str | None) -> T.DataType:
-    """schema_of_variant(_agg) DDL → DataType ('OBJECT<...>' → struct;
-    VOID → NullType, VARIANT → VariantType)."""
-    if not ddl:
-        return T.NullType()
-    return T._parse_datatype_string(ddl.replace("OBJECT<", "STRUCT<"))
-
-
-def _merge_variant_types(a: T.DataType, b: T.DataType) -> T.DataType:
-    """The merge schema_of_variant_agg applies across rows, mirrored on
-    the driver: folding per-group results with it gives exactly the
-    type one global aggregate would (tests/test_epoch_summary.py pins
-    it against Spark). Integers are BIGINT, which widens into decimals
-    as DECIMAL(20,0); a decimal wider than 38 digits, or any decimal
-    meeting a DOUBLE, becomes DOUBLE; object fields union in name
-    order; anything else incompatible becomes VARIANT."""
-    if a == b or isinstance(b, T.NullType):
-        return a
-    if isinstance(a, T.NullType):
-        return b
-    num = (T.LongType, T.DecimalType, T.DoubleType)
-    if isinstance(a, num) and isinstance(b, num):
-        if isinstance(a, T.DoubleType) or isinstance(b, T.DoubleType):
-            return T.DoubleType()
-        da, db = (
-            x if isinstance(x, T.DecimalType) else T.DecimalType(20, 0)
-            for x in (a, b)
-        )
-        scale = max(da.scale, db.scale)
-        digits = max(da.precision - da.scale, db.precision - db.scale) + scale
-        return T.DecimalType(digits, scale) if digits <= 38 else T.DoubleType()
-    if isinstance(a, T.StructType) and isinstance(b, T.StructType):
-        fa = {f.name: f.dataType for f in a.fields}
-        fb = {f.name: f.dataType for f in b.fields}
-        return T.StructType(
-            [
-                T.StructField(
-                    n,
-                    _merge_variant_types(
-                        fa.get(n, T.NullType()), fb.get(n, T.NullType())
-                    ),
-                    True,
-                )
-                for n in sorted(fa.keys() | fb.keys())
-            ]
-        )
-    if isinstance(a, T.ArrayType) and isinstance(b, T.ArrayType):
-        return T.ArrayType(_merge_variant_types(a.elementType, b.elementType), True)
-    return T.VariantType()
-
-
 def _payload_schema(batch: T.DataType, base: T.StructType) -> T.StructType:
-    """An epoch's inferred after-image type merged into the table's
-    payload schema; a non-object image (all-null, mixed) adds nothing."""
-    from plugin_debezium_spark.functions.decode import merge_types
-
+    """An epoch's inferred image type evolved into the table's payload
+    schema (plans/evolve.py); a non-object image (all-null, mixed) adds
+    nothing."""
     if not isinstance(batch, T.StructType):
         return base
-    merged = merge_types(base, batch)
-    assert isinstance(merged, T.StructType)
-    return merged
+    return evolve_schema(base, batch)[0]
+
+
+def decode_images(events: DataFrame) -> tuple[DataFrame, T.StructType]:
+    """The delivery decode (stream_rows, export): ONE
+    schema_of_variant_agg over both images of the events (before
+    appears on u/d only), normalized like the table's types, then a
+    variant cast of each image. Returns the events with typed
+    ``before``/``after`` structs in place of the JSON strings, and the
+    payload schema."""
+    ddl = (
+        events.select(F.explode(F.array("before_json", "after_json")).alias("_j"))
+        .filter(F.col("_j").isNotNull())
+        .agg(F.expr("schema_of_variant_agg(parse_json(_j))"))
+        .collect()[0][0]
+    )
+    schema = _payload_schema(_variant_type(ddl), T.StructType([]))
+    if not schema.fields:  # keyless epoch of tombstones only
+        schema = T.StructType([T.StructField("content", T.StringType())])
+    s = schema.simpleString()
+    typed = events.withColumns(
+        {
+            img: F.expr(f"cast(parse_json({img}_json) as {s})")
+            for img in ("before", "after")
+        }
+    ).drop("before_json", "after_json")
+    return typed, schema
 
 
 def filter_events(cfg: EngineConfig, events: DataFrame) -> DataFrame:

@@ -19,10 +19,6 @@ from enum import Enum
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from plugin_debezium_spark.functions.decode import (
-    decode_envelope,
-    infer_payload_schema,
-)
 from plugin_debezium_spark.models import DATA_OPS
 from plugin_debezium_spark.operators.filters import (
     Deleted,
@@ -40,6 +36,7 @@ from plugin_debezium_spark.operators.shape import (
     wrap,
 )
 from plugin_debezium_spark.sources.log_reader import read_after
+from plugin_debezium_spark.streaming.engine import decode_images
 
 
 class Format(str, Enum):
@@ -113,9 +110,7 @@ def export(spark: SparkSession, cfg: ExportConfig) -> dict:
     """Run the shaped export; returns {uris, size, counts} (the
     reference's Output). Zero new records → empty Output, no crash
     (the trigger's no-execution case, mysql/Trigger.java:105-107)."""
-    events = read_after(spark, cfg.log_dir, cfg.last_lsn)
-    schema = infer_payload_schema(events)
-    decoded = decode_envelope(events, schema, "native")
+    decoded, _ = decode_images(read_after(spark, cfg.log_dir, cfg.last_lsn))
     routed = route(shape_stream(decoded, cfg), cfg.split_table).drop(
         "source"
     ).cache()

@@ -33,6 +33,7 @@ from plugin_debezium_spark.models import envelope_log_schema
 from plugin_debezium_spark.streaming.engine import (
     EngineConfig,
     _apply_epoch_variant,
+    decode_images,
     ensure_table,
     filter_events,
 )
@@ -262,8 +263,6 @@ def stream_rows(
     import os
     import time as _time
 
-    from pyspark.sql import types as T
-
     from plugin_debezium_spark.operators import shape as _shape
     from plugin_debezium_spark.operators.filters import Deleted
     from plugin_debezium_spark.plans.fs import LocalMetaFS
@@ -271,10 +270,6 @@ def stream_rows(
         log_high_water_mark,
         plan_epochs,
         read_range,
-    )
-    from plugin_debezium_spark.streaming.engine import (
-        _payload_schema,
-        _variant_type,
     )
 
     if fmt not in ("raw", "inline", "wrap"):
@@ -310,37 +305,21 @@ def stream_rows(
             _commit(offset)
 
     def _shaped(events):
-        ev = events
-        # one inference over BOTH images (before appears on u/d only):
-        # epoch-bounded agg, same schema_of_variant_agg the engine uses
-        ddl = (
-            ev.select(
-                F.explode(
-                    F.array("before_json", "after_json")
-                ).alias("_j")
-            )
-            .filter(F.col("_j").isNotNull())
-            .agg(F.expr("schema_of_variant_agg(parse_json(_j))"))
-            .collect()[0][0]
-        )
-        schema = _payload_schema(_variant_type(ddl), T.StructType([]))
-        if not schema.fields:  # keyless epoch of tombstones only
-            schema = T.StructType([T.StructField("content", T.StringType())])
-        s = schema.simpleString()
-        typed = ev.select(
+        decoded, schema = decode_images(events)
+        typed = decoded.select(
             "lsn",
             "ts_ms",
             "op",
             "key",
             "source",
-            *(["transaction"] if "transaction" in ev.columns else []),
+            *(["transaction"] if "transaction" in events.columns else []),
             *(
                 ["message_json"]
-                if fmt == "raw" and "message_json" in ev.columns
+                if fmt == "raw" and "message_json" in events.columns
                 else []
             ),
-            F.expr(f"cast(parse_json(before_json) as {s})").alias("before"),
-            F.expr(f"cast(parse_json(after_json) as {s})").alias("after"),
+            "before",
+            "after",
         )
         if cfg.column_truncate or cfg.column_mask or cfg.column_mask_hash:
             # capture-side column transforms apply to per-row delivery
